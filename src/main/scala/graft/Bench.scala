@@ -224,6 +224,16 @@ object Bench {
     s"""[$l,${mbs.round},${math.round(bootMs / 1000.0)}$w]"""
   }
 
+  /** The driver line's health block: the probe's reading when it ran
+    * (mbs > 0). When the probe failed, the block still rides the line if
+    * the wave re-run pass fired, so a wave-polluted leg is always
+    * annotated; its mbs then reads -1, which scaling_report.py's health
+    * gate fails, as it should for an unmeasured box. */
+  def healthBlock(load: Double, mbs: Double, bootMs: Long,
+                  waveReruns: Int): Option[String] =
+    if (mbs > 0 || waveReruns > 0) Some(healthJson(load, mbs, bootMs, waveReruns))
+    else None
+
   def main(args: Array[String]): Unit = {
     val (hLoad, hMbs, hBoot) = healthProbe()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -873,7 +883,7 @@ object Bench {
     }
     val sfName = new java.io.File(sfDir).getName
     val out = formatLine(results, failed, sfName,
-      if (hMbs > 0) Some(healthJson(hLoad, hMbs, hBoot, waveReruns)) else None)
+      healthBlock(hLoad, hMbs, hBoot, waveReruns))
     tee.log(s"[bench] done ${java.time.Instant.now()} total=${results.values.filter(_ > 0).sum}")
     tee.close()
     println(out)

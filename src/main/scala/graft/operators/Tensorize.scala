@@ -9,10 +9,16 @@ import graft.Tables
   * the (N, T, F) sample matrices of datasets/turbofan.py:63-88 expressed as
   * one row per window with an `array<double>` feature column.
   *
-  * Everything stays inside Catalyst higher-order functions (collect_list
-  * over a row frame, transform/aggregate) — no UDFs, no driver loops — so
-  * whole-stage codegen applies and the only shuffle is the partition-by-key
-  * sort, exactly one per pipeline at any scale.
+  * The strided windows come from one kernel that runs once per trajectory:
+  * a `groupBy(key)` collects each trajectory's points, sorted by the order
+  * columns (`sort_array` over (order…, values…) structs — ties on the
+  * order keys break on the values, so the result does not depend on input
+  * order or partitioning), and the [[graft.functions.WindowTensors]]
+  * expression scales, windows, normalizes and labels them in plain loops;
+  * `inline` turns its array into one row per window. The only shuffle is
+  * that one hash exchange on the key, at any scale. Per-key memory is the
+  * sorted trajectory, n × (|order| + F) values — the same order as the
+  * unbounded `max().over(key)` frame buffer of a window formulation.
   */
 object Tensorize {
 
@@ -24,31 +30,8 @@ object Tensorize {
     * Output: (key, widx, features: array<double> length T, rul).
     */
   def windowTensorize(df: DataFrame, key: String, order: Seq[String],
-                      valueCol: String, t: Int, skip: Int, rulCap: Int): DataFrame = {
-    val wKey = Window.partitionBy(col(key))
-    val w = Window.partitionBy(col(key)).orderBy(order.map(col): _*)
-    val frame = w.rowsBetween(-(t - 1), 0)
-    val scaled = df.withColumn("_v", col(valueCol) / max(col(valueCol)).over(wKey))
-    val windowed = scaled
-      .withColumn("rn", row_number().over(w))
-      .withColumn("n_all", count(lit(1)).over(wKey))
-      .withColumn("raw_win", collect_list(col("_v")).over(frame))
-      .filter(col("rn") >= t && (col("rn") - t) % skip === 0)
-      .withColumn("widx", ((col("rn") - t) / skip).cast("long"))
-      .withColumn("rul", least(lit(rulCap), col("n_all") - col("rn")))
-    // per-window z-norm: mean/population-std over the T values, std<=eps → 1
-    val mean = aggregate(col("raw_win"), lit(0.0), (acc, x) => acc + x) / lit(t)
-    val winNormed = windowed
-      .withColumn("w_mean", mean)
-      .withColumn("w_std",
-        sqrt(aggregate(col("raw_win"), lit(0.0),
-          (acc, x) => acc + (x - col("w_mean")) * (x - col("w_mean"))) / lit(t)))
-      .withColumn("w_std_safe",
-        when(col("w_std") <= lit(1e-12), lit(1.0)).otherwise(col("w_std")))
-      .withColumn("features",
-        transform(col("raw_win"), x => (x - col("w_mean")) / col("w_std_safe")))
-    winNormed.select(col(key), col("widx"), col("features"), col("rul"))
-  }
+                      valueCol: String, t: Int, skip: Int, rulCap: Int): DataFrame =
+    windowTensorizeMulti(df, key, order, Seq(valueCol), t, skip, rulCap)
 
   /** Multi-feature variant of [[windowTensorize]] — the reference's
     * (N, T, F) tensors with F = several sensor/setting columns
@@ -60,45 +43,23 @@ object Tensorize {
     * while `settingCols` (the three operating-condition columns, indices
     * {0,1,2} in the reference) are divided by 100 instead — operating
     * modes are discrete levels whose magnitude carries meaning, so
-    * per-window standardization would erase them. */
+    * per-window standardization would erase them.
+    *
+    * Values are cast to double before scaling. A null value or a column
+    * whose trajectory max is 0 fails the query with a named error
+    * (TENSORIZE_NULL_VALUE / TENSORIZE_ZERO_MAX); a trajectory shorter
+    * than `t` emits no window; null keys form their own trajectory. */
   def windowTensorizeMulti(df: DataFrame, key: String, order: Seq[String],
                            valueCols: Seq[String], t: Int, skip: Int,
                            rulCap: Int,
                            settingCols: Set[String] = Set.empty): DataFrame = {
-    val wKey = Window.partitionBy(col(key))
-    val w = Window.partitionBy(col(key)).orderBy(order.map(col): _*)
-    val frame = w.rowsBetween(-(t - 1), 0)
-    val scaled = valueCols.foldLeft(df) { (d, c) =>
-      d.withColumn(s"_s_$c", col(c) / max(col(c)).over(wKey))
-    }
-    val windowed = valueCols.foldLeft(
-      scaled.withColumn("rn", row_number().over(w))
-            .withColumn("n_all", count(lit(1)).over(wKey))) { (d, c) =>
-      d.withColumn(s"_w_$c", collect_list(col(s"_s_$c")).over(frame))
-    }
-      .filter(col("rn") >= t && (col("rn") - t) % skip === 0)
-      .withColumn("widx", ((col("rn") - t) / skip).cast("long"))
-      .withColumn("rul", least(lit(rulCap), col("n_all") - col("rn")))
-    // normalize each feature's window (z-norm sensors, /100 settings),
-    // then interleave row-major (time, feature)
-    val normed = valueCols.foldLeft(windowed) { (d, c) =>
-      val arr = col(s"_w_$c")
-      if (settingCols.contains(c))
-        d.withColumn(s"_z_$c", transform(arr, x => x / lit(100.0)))
-      else {
-        val mean = aggregate(arr, lit(0.0), (acc, x) => acc + x) / lit(t)
-        d.withColumn(s"_m_$c", mean)
-          .withColumn(s"_sd_$c", {
-            val sd = sqrt(aggregate(arr, lit(0.0),
-              (acc, x) => acc + (x - col(s"_m_$c")) * (x - col(s"_m_$c"))) / lit(t))
-            when(sd <= lit(1e-12), lit(1.0)).otherwise(sd)
-          })
-          .withColumn(s"_z_$c", transform(arr, x => (x - col(s"_m_$c")) / col(s"_sd_$c")))
-      }
-    }
-    val features = flatten(transform(sequence(lit(0), lit(t - 1)),
-      i => array(valueCols.map(c => element_at(col(s"_z_$c"), i + 1)): _*)))
-    normed.select(col(key), col("widx"), features.as("features"), col("rul"))
+    val point = struct(order.map(col) ++ valueCols.zipWithIndex.map {
+      case (c, i) => col(c).cast("double").as(s"_v$i") }: _*)
+    df.groupBy(col(key))
+      .agg(sort_array(collect_list(point)).as("_pts"))
+      .select(col(key), inline(graft.functions.WindowTensors(col("_pts"),
+        order.length, valueCols, valueCols.map(settingCols.contains),
+        t, skip, rulCap)))
   }
 
   /** music._change_to_seq_len: bring every trajectory to exactly `t` steps —

@@ -178,6 +178,61 @@ class EdgeCaseSpec extends SparkSpec {
     assert(!b.exists(_._1 == null), "a null-key window leaked into the output")
   }
 
+  /** The messages of an exception and all its causes, joined. */
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(x => String.valueOf(x.getMessage)).mkString(" | ")
+
+  private def series(rows: Seq[(java.lang.Long, Long, java.lang.Double, Double)]) =
+    rows.toDF("k", "t", "v", "w")
+
+  test("window tensorize: a null feature value fails with a named error") {
+    val df = series((1 to 8).map(i => (1L: java.lang.Long, i.toLong,
+      (if (i == 5) null else i.toDouble): java.lang.Double, i * 2.0)))
+    val single = intercept[Exception] {
+      operators.Tensorize.windowTensorize(df, "k", Seq("t"), "v", 4, 2, 100).collect()
+    }
+    assert(messages(single).contains("[TENSORIZE_NULL_VALUE] feature column `v`"),
+      messages(single))
+    val multi = intercept[Exception] {
+      operators.Tensorize.windowTensorizeMulti(df, "k", Seq("t"), Seq("w", "v"),
+        4, 2, 100).collect()
+    }
+    assert(messages(multi).contains("[TENSORIZE_NULL_VALUE] feature column `v`"),
+      messages(multi))
+  }
+
+  test("window tensorize: an all-zero column fails with a named error") {
+    val df = series((1 to 8).map(i => (1L: java.lang.Long, i.toLong,
+      i.toDouble: java.lang.Double, 0.0)))
+    val e = intercept[Exception] {
+      operators.Tensorize.windowTensorizeMulti(df, "k", Seq("t"), Seq("v", "w"),
+        4, 2, 100).collect()
+    }
+    assert(messages(e).contains("[TENSORIZE_ZERO_MAX] feature column `w`"), messages(e))
+  }
+
+  test("window tensorize: a trajectory shorter than T emits no windows") {
+    val df = series((1 to 3).map(i => (1L: java.lang.Long, i.toLong,
+        i.toDouble: java.lang.Double, 1.0)) ++
+      (1 to 4).map(i => (2L: java.lang.Long, i.toLong, i.toDouble: java.lang.Double, 1.0)))
+    val got = operators.Tensorize.windowTensorize(df, "k", Seq("t"), "v", 4, 2, 100)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got == Set((2L, 0L)))
+  }
+
+  test("window tensorize: null keys form their own trajectory") {
+    val rows = (1 to 9).map(i => (i.toLong, i.toDouble: java.lang.Double, i * 0.5))
+    val keyed = series(rows.map { case (t, v, w) => (7L: java.lang.Long, t, v, w) })
+    val nullKeyed = series(rows.map { case (t, v, w) => (null: java.lang.Long, t, v, w) })
+    val (nullKey, key7) = operators.Tensorize.windowTensorize(
+        keyed.unionByName(nullKeyed), "k", Seq("t"), "v", 4, 2, 100)
+      .collect().partition(_.isNullAt(0))
+    def digest(rs: Array[org.apache.spark.sql.Row]) =
+      rs.map(r => (r.getLong(1), r.getSeq[Double](2), r.getLong(3))).toSet
+    assert(nullKey.length == 3 && digest(nullKey) == digest(key7))
+  }
+
   test("round-7 op guardrails fail loudly on misuse") {
     val docs = (1 to 5).map(i => (i.toLong, "some text here", "en", 14))
       .toDF("doc_id", "text", "lang", "n_chars")

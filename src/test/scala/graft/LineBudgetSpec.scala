@@ -94,6 +94,29 @@ class LineBudgetSpec extends AnyFunSuite {
       s"health block cost the per-query map at realistic values:\n$line")
   }
 
+  test("worst-case 4-element health block (94 wave re-runs) keeps the full-name map") {
+    // every gated query flagged and re-run: the 4th health element at its
+    // widest realistic value (',94') must still fit the full-name line
+    val results = names.map(_ -> 3.21).toMap
+    val health = Bench.healthJson(0.93, 5012.4, 2100, waveReruns = 94)
+    assert(health == """[0.9,5012,2,94]""", health)
+    val line = Bench.formatLine(results, Nil, "sf0.1", Some(health))
+    assert(line.length <= 1980, s"len=${line.length}")
+    assert(line.contains(""","h":[0.9,5012,2,94],"sf":"""), line.takeRight(80))
+    assert(names.forall(n => line.contains("\"" + n + "\":")),
+      s"4-element health block cost the full-name map:\n$line")
+  }
+
+  test("wave re-runs ride the line even when the health probe failed") {
+    // the probe reports mbs <= 0 when it could not run: no block for a
+    // clean leg, but a leg whose wave pass fired keeps its annotation
+    assert(Bench.healthBlock(0.93, -1.0, 2100, waveReruns = 0).isEmpty)
+    assert(Bench.healthBlock(0.93, -1.0, 2100, waveReruns = 3)
+      .contains("""[0.9,-1,2,3]"""))
+    assert(Bench.healthBlock(0.93, 5012.4, 2100, waveReruns = 0)
+      .contains("""[0.9,5012,2]"""))
+  }
+
   test("alias rungs keep map AND health when full names + health no longer fit") {
     // the r16 ladder shed health here; the r17 priority is explicit:
     // full-name map > health > precision > aliased map. A wide health

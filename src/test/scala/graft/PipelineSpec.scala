@@ -10,18 +10,8 @@ class PipelineSpec extends SparkSpec {
   import ss.implicits._
 
   test("full TurboFan-style pipeline: CSV -> multi-feature tensorize -> split") {
-    // synthesize a small turbofan-format file: 3 trajectories, 30 steps
-    val dir = java.nio.file.Files.createTempDirectory("tf").toFile
-    val f = new java.io.File(dir, "train.txt")
-    val pw = new java.io.PrintWriter(f)
-    for (traj <- 1 to 3; t <- 1 to 30) {
-      val settings = Seq(0.5, 0.6, 0.7).map(s => s + t * 0.01)
-      val sensors = (1 to 21).map(j => j * 1.0 + t * 0.1 * traj)
-      pw.println((Seq(traj, t) ++ settings ++ sensors).mkString(" ") + " ")
-    }
-    pw.close()
-
-    val raw = sources.TrajectoryCsv.read(spark, f.getAbsolutePath)
+    // a small turbofan-format file: 3 trajectories, 30 steps
+    val raw = sources.TrajectoryCsv.read(spark, TurbofanFixture.writeTrain())
     val settings = (1 to 3).map(i => s"setting_$i")
     val featureCols = settings ++ (1 to 4).map(i => s"sensor_$i")
     val tensors = Tensorize.windowTensorizeMulti(raw, "trajectory_id", Seq("t"),
