@@ -17,10 +17,10 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * that pair materializes a d²-element GenericArrayData PER ROW (a ~34 KB
   * allocation for a 65-dim design row) purely as a carrier between the
   * projection and the aggregate's sum loop. This aggregate folds each row
-  * straight into its mutable double[d²+d] buffer — zero per-row
-  * allocation, one fused multiply-accumulate loop — and still participates
-  * in map-side partial aggregation, so the shuffle carries d²+d doubles
-  * per map partition at any corpus size.
+  * straight into its mutable double[d²+d] buffer — one d-length copy of
+  * the row per row, one fused multiply-accumulate loop over that copy —
+  * and still participates in map-side partial aggregation, so the
+  * shuffle carries d²+d doubles per map partition at any corpus size.
   *
   * Raggedness is a hard error (not a silent mis-index): the flat layout
   * addresses cells as i·d+j, so a row of different length would scatter
@@ -58,7 +58,7 @@ case class NormalEqAgg(x: Expression, w: Expression, wz: Expression,
     // row would be silently ignored instead of tripping the raggedness
     // check, and an all-empty input would eval to null downstream
     require(d > 0, "normal_eq: empty feature vector")
-    // null elements must be rejected before getDouble: UnsafeArrayData
+    // null elements must be rejected before the copy: UnsafeArrayData
     // yields garbage 0.0 for them, GenericArrayData an NPE — an O(d) scan
     // against the O(d²) accumulate below
     var k = 0
@@ -78,13 +78,17 @@ case class NormalEqAgg(x: Expression, w: Expression, wz: Expression,
     val wzRaw = wz.eval(input)
     val wv = if (wRaw == null) 0.0 else wRaw.asInstanceOf[Double]
     val wzv = if (wzRaw == null) 0.0 else wzRaw.asInstanceOf[Double]
+    // one copy of the row, then a plain array loop the JIT can vectorize
+    // (per-element getDouble goes through the ArrayData interface); the
+    // operations and their order are unchanged, so the sums are too
+    val xs = a.toDoubleArray()
     var i = 0
     while (i < d) {
-      val xi = a.getDouble(i)
+      val xi = xs(i)
       val xiw = xi * wv
       val base = i * d
       var j = 0
-      while (j < d) { b(base + j) += xiw * a.getDouble(j); j += 1 }
+      while (j < d) { b(base + j) += xiw * xs(j); j += 1 }
       b(d * d + i) += xi * wzv
       i += 1
     }

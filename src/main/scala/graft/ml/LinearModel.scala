@@ -20,10 +20,11 @@ import graft.Tables
 object LinearModel {
 
   /** Fit w (last element = bias) on (features: array<double>, label).
+    * Rows with null features or a null label are dropped.
     *
-    * Sufficient statistics via the native vector_sum aggregate: each row
-    * contributes its flattened d×d outer product and its d·y cross terms
-    * as ONE array value; partial aggregation sums them map-side, so the
+    * Sufficient statistics via one [[graft.functions.NormalEqAgg]]: each
+    * row folds its d×d outer product and its d·y cross terms into the
+    * aggregate's buffer; partial aggregation sums them map-side, so the
     * shuffle carries d²+d doubles per map partition — the posexplode²
     * formulation this replaces inflated the corpus ×d(d+1)/2 rows through
     * the shuffle. */
@@ -32,6 +33,9 @@ object LinearModel {
     val withBias = df.select(
       concat(col(featCol), array(lit(1.0))).as("x"),
       col(labelCol).cast("double").as("y"))
+      // NormalEqAgg would add a null-label row's xxᵀ to XᵀX and nothing
+      // to Xᵀy (null wz counts as 0), pulling the fit toward 0
+      .filter(col("y").isNotNull)
     // one fused aggregation; see NormalEqAgg for why this replaces the
     // vector_sum(weighted_outer_flat(...)) pair (per-row d² allocation),
     // and raggedness now fails fast inside the aggregate itself

@@ -109,8 +109,12 @@ object Curation {
     // pinStages=true (r21, guide §3.3 "materialising an intermediate
     // truncates the plan" / the r20 verdict's #6 item): the SESSION-OWNED
     // callers (curationRecipeQuery) swap the stage persists for eager
-    // localCheckpoints. Values are identical — the same frames are
-    // materialized to the same storage level — but a persisted frame
+    // localCheckpoints. Values are identical, but the storage is not:
+    // persist(MEMORY_AND_DISK) caches compressed columnar batches while a
+    // localCheckpoint stores row blocks (several times larger for
+    // text-heavy frames; both spill to disk), and losing an executor
+    // loses checkpointed session state for good (the query fails, where
+    // a lost cached block recomputes). A persisted frame
     // KEEPS its full logical lineage, so every downstream verdict leg
     // re-enters analysis/optimization/cache-lookup over the whole
     // fixpoint history per evaluation (the recipe's executed plan was
@@ -302,9 +306,12 @@ object Curation {
       val (df, h) = build()
       val prev = recipeCache.putIfAbsent(k, (spark, df))
       // losing a concurrent first-call race would otherwise strand the
-      // loser's persisted stage frames for the app lifetime with no
-      // handle retained — close them; the loser's frame is discarded,
-      // so the close degradation never reaches a consumer
+      // loser's stage frames for the app lifetime with no handle
+      // retained — close them; the loser's frame is discarded, so the
+      // close degradation never reaches a consumer. This path runs with
+      // pinStages, where the frames are localCheckpoints: close() only
+      // unpersists, which does nothing to checkpoint blocks, and those
+      // stay until the ContextCleaner reclaims them after GC
       if (prev != null) { h.close(); prev._2 } else df
     }
   }
@@ -712,9 +719,12 @@ object Curation {
       val (df, h) = build()
       val prev = incrementCache.putIfAbsent(k, (spark, df))
       // same race hygiene as the recipe memo: a losing first call must
-      // close its own handle (persisted frames + the fixpoint
-      // checkpoint) — its frame is discarded, so the invalidation the
-      // checkpoint-free implies never reaches a consumer
+      // close its own handle (stage frames + the fixpoint checkpoint) —
+      // its frame is discarded, so the invalidation the checkpoint-free
+      // implies never reaches a consumer. As there, on the pinStages
+      // path close() does nothing to the stage frames' localCheckpoint
+      // blocks (it frees only the fixpoint checkpoint); the
+      // ContextCleaner reclaims them after GC
       if (prev != null) { h.close(); prev._2 } else df
     }
   }

@@ -314,6 +314,21 @@ class EdgeCaseSpec extends SparkSpec {
     assert(e3.getMessage.contains("empty input"))
   }
 
+  test("fitRidge drops a null-label row, bitwise, as it drops a null-feature row") {
+    val rows = (1 to 12).map { i =>
+      (Seq(i * 0.5, math.sin(i.toDouble)), Option(3.0 * i - 1.0 + math.cos(i.toDouble)))
+    }
+    // one partition in row order, so the kept rows sum in the same order
+    def fit(rs: Seq[(Seq[Double], Option[Double])]) = graft.ml.LinearModel
+      .fitRidge(rs.toDF("f", "label").coalesce(1), "f", "label", lambda = 1e-3)
+      .map(java.lang.Double.doubleToRawLongBits).toSeq
+    val base = fit(rows)
+    assert(fit(rows :+ ((Seq(100.0, -50.0), None))) == base,
+      "a null-label row changed the fit")
+    assert(fit(rows :+ ((null: Seq[Double], Some(7.0)))) == base,
+      "a null-feature row changed the fit")
+  }
+
   test("component labels converge on a long chain (pointer jumping)") {
     // a path graph 0-1-2-...-59: min-label needs 59 hops by neighbor
     // propagation alone; pointer jumping must close it within maxIters=20

@@ -43,6 +43,39 @@ class PipelineSpec extends SparkSpec {
     assert(counts("train") == 12 && counts("test") == 3)
   }
 
+  test("the paper pass runs no job before its two actions, each scanning the file once") {
+    // the perfbench turbofan operation on the fixture: a new eager job or
+    // a second scan of the input anywhere in it fails here
+    val file = TurbofanFixture.writeTrain()
+    val settings = (1 to 3).map(i => s"setting_$i")
+    val features = settings ++ (1 to 21).map(i => s"sensor_$i")
+    val (split, built) = JobProbe(spark) {
+      val raw = sources.TrajectoryCsv.read(spark, file)
+      val tensors = Tensorize.windowTensorizeMulti(raw, "trajectory_id", Seq("t"),
+        features, t = 10, skip = 5, rulCap = 15, settingCols = settings.toSet)
+      TimeSeriesOps.ratioSplit(tensors, "trajectory_id", Seq("widx"), 0.8)
+    }
+    assert(built.isEmpty, s"read + tensorize + split started jobs: $built")
+    val bytes = new java.io.File(file).length
+    val (w, fit) = JobProbe(spark) {
+      graft.ml.LinearModel.fitRidge(split.filter(col("fold") === "train"),
+        "features", "rul", lambda = 1e-3)
+    }
+    assert(w.length == 10 * features.length + 1)
+    assert(fit.nonEmpty && fit.map(_.inputBytes).sum == bytes,
+      s"fitRidge read ${fit.map(_.inputBytes)} bytes of a $bytes-byte file")
+    val (counts, eval) = JobProbe(spark) {
+      split.select(col("fold"), col("rul"),
+          graft.ml.LinearModel.predict(col("features"), w).as("pred"))
+        .groupBy(col("fold"))
+        .agg(count(lit(1)), sum(pow(col("pred") - col("rul"), 2.0)))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
+    assert(counts == Map("train" -> 12L, "test" -> 3L))
+    assert(eval.nonEmpty && eval.map(_.inputBytes).sum == bytes,
+      s"predict + MSE read ${eval.map(_.inputBytes)} bytes of a $bytes-byte file")
+  }
+
   test("salted aggregation equals direct aggregation") {
     val ev = Tables.events(spark, sf)
     val direct = ev.groupBy("user_id")
