@@ -1,42 +1,92 @@
 package graft
 
+import java.io.FileNotFoundException
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterBridge
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated test tables (TESTDATA.md).
   *
   * All engine operators take DataFrames; these helpers only centralize the
   * path convention `<sfDir>/<table>.parquet`. Reads are plain parquet scans so
   * Catalyst predicate pushdown / column pruning apply unimpeded.
+  *
+  * Building a loader's DataFrame starts no Spark job. The schema comes from
+  * ONE parquet footer read on the driver ([[parquetSchema]]) and is handed
+  * to the reader, so Spark skips its schema-inference job (a whole job to
+  * read one footer, ~70-90 ms of scheduling per loader call on a 4-core
+  * box, paid on every query build). The file picked is the one Spark's
+  * own non-merging inference reads: `_common_metadata` if present, else
+  * `_metadata`, else the first data file in path order, skipping other
+  * hidden `_`/`.` files (`_SUCCESS`, `.crc`). Like that inference, it
+  * assumes every part file shares the picked file's schema.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, table: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$table.parquet")
+  def load(spark: SparkSession, sfDir: String, table: String): DataFrame = {
+    val path = s"$sfDir/$table.parquet"
+    spark.read.schema(parquetSchema(spark, path)).parquet(path)
+  }
 
-  /** Load `table` with any top-level TIMESTAMP_NTZ column re-read as a µs
-    * TIMESTAMP whose instant is the stored wall clock read as UTC — the
-    * same value [[ntzAsUtcInstant]] computes (the parquet int64 micros
-    * pass through unchanged, so this is session-timezone-independent like
-    * the expression form), but applied through the READER SCHEMA instead
-    * of a projection. The difference is plan shape, not values: a filter
-    * on the column now reaches the scan as a parquet pushdown predicate
-    * (PushedFilters gains the comparison, enabling row-group min/max
-    * skipping — the r20 optimization-round q3_join plans showed the
-    * projection form reduced pushdown to bare IsNotNull), and no per-row
+  /** The schema Spark's non-merging parquet inference gives `path` (a file
+    * or a directory), resolved from one footer on the driver without a
+    * Spark job. Fails, naming the path, when the path is missing or holds
+    * no data file, and fails when `spark.sql.parquet.mergeSchema` is on:
+    * one footer cannot stand for a merged schema. */
+  private[graft] def parquetSchema(spark: SparkSession, path: String): StructType = {
+    require(!spark.conf.get(SQLConf.PARQUET_SCHEMA_MERGING_ENABLED.key).toBoolean,
+      s"Tables: ${SQLConf.PARQUET_SCHEMA_MERGING_ENABLED.key}=true is not " +
+        s"supported; the loaders read one footer per table ($path)")
+    val conf = FooterBridge.hadoopConf(spark)
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val rootStatus =
+      try fs.getFileStatus(root)
+      catch { case e: FileNotFoundException =>
+        throw new IllegalArgumentException(s"Tables: no parquet table at $path", e)
+      }
+    def summary(n: String) = n == "_common_metadata" || n == "_metadata"
+    def hidden(n: String) = (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (st.isFile) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot { c => val n = c.getPath.getName; hidden(n) && !summary(n) }
+        .flatMap(leaves)
+    val files = leaves(rootStatus).sortBy(_.getPath.toString)
+    def named(n: String) = files.find(_.getPath.getName == n)
+    val pick = named("_common_metadata").orElse(named("_metadata"))
+      .orElse(files.find(f => !summary(f.getPath.getName)))
+      .getOrElse(throw new IllegalArgumentException(
+        s"Tables: no parquet data file under $path"))
+    FooterBridge.footerSchema(spark, pick, conf)
+  }
+
+  /** `schema` with every top-level TIMESTAMP_NTZ column re-typed as a µs
+    * TIMESTAMP: read through the reader schema, the column's instant is
+    * the stored wall clock read as UTC — the same value [[ntzAsUtcInstant]]
+    * computes (the parquet int64 micros pass through unchanged, so this is
+    * session-timezone-independent like the expression form). The
+    * difference is plan shape, not values: a filter on the column reaches
+    * the scan as a parquet pushdown predicate (PushedFilters gains the
+    * comparison, enabling row-group min/max skipping — q3_join plans
+    * showed the projection form reduced pushdown to bare IsNotNull), and
+    * no per-row
     * timestampdiff/timestamp_micros conversion runs. Value parity with
     * the expression form is pinned by TablesSpec. */
+  private def ntzAsUtc(schema: StructType): StructType = StructType(schema.map {
+    case f if f.dataType == TimestampNTZType => f.copy(dataType = TimestampType)
+    case f => f
+  })
+
   private def loadNtzAsUtc(spark: SparkSession, sfDir: String,
                            table: String): DataFrame = {
-    import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
-    val raw = load(spark, sfDir, table)
-    if (!raw.schema.exists(_.dataType == TimestampNTZType)) raw
-    else spark.read.schema(StructType(raw.schema.map {
-      case f if f.dataType == TimestampNTZType => f.copy(dataType = TimestampType)
-      case f => f
-    })).parquet(s"$sfDir/$table.parquet")
+    val path = s"$sfDir/$table.parquet"
+    spark.read.schema(ntzAsUtc(parquetSchema(spark, path))).parquet(path)
   }
 
   /** Ceiling for the tiny-input rebalance below: a table at most this
@@ -122,15 +172,16 @@ object Tables {
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-    load(spark, sfDir, "events").schema("ts").dataType match {
-      // untagged-µs form: reader-schema swap (see loadNtzAsUtc) so ts
+    val path = s"$sfDir/events.parquet"
+    val schema = parquetSchema(spark, path)
+    schema("ts").dataType match {
+      // untagged-µs form: reader-schema swap (see ntzAsUtc) so ts
       // predicates stay pushdown-eligible and no per-row rewrite runs
-      case TimestampNTZType => loadNtzAsUtc(spark, sfDir, "events")
+      case TimestampNTZType => spark.read.schema(ntzAsUtc(schema)).parquet(path)
       // legacy TIMESTAMP(NANOS)-as-long form: the expression rewrite is
       // unavoidable (ns→µs integer division per row)
-      case LongType => normalizeEventTs(load(spark, sfDir, "events"))
-      case _ => load(spark, sfDir, "events")
+      case LongType => normalizeEventTs(spark.read.schema(schema).parquet(path))
+      case _ => spark.read.schema(schema).parquet(path)
     }
   }
 
@@ -138,7 +189,6 @@ object Tables {
     * physical representation was. Shared by batch and streaming reads. */
   def normalizeEventTs(raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{expr, timestamp_micros}
-    import org.apache.spark.sql.types.LongType
     raw.schema("ts").dataType match {
       // ns→µs MUST be integer division: `/` on longs promotes to double, and
       // epoch-ns (~1.7e18) exceeds double's 2^53 mantissa → off-by-1µs noise.
@@ -156,7 +206,6 @@ object Tables {
     * oracle reads the same bytes as naive wall clocks. */
   def ntzAsUtcInstant(df: DataFrame, c: String): DataFrame = {
     import org.apache.spark.sql.functions.{expr, timestamp_micros}
-    import org.apache.spark.sql.types.TimestampNTZType
     df.schema(c).dataType match {
       case TimestampNTZType => df.withColumn(c, timestamp_micros(
         expr(s"timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', $c)")))

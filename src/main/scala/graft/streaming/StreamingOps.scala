@@ -46,20 +46,24 @@ object StreamingOps {
                  tsType: Option[DataType] = None): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // A stream needs its schema up front: probe the directory's current
-    // physical ts form with a batch read, then apply the same
-    // normalization as the batch reader. The probe CANNOT silently fall
-    // back on failure (r9 advice): the directory may be empty at stream
-    // start and fill later with the OTHER physical form — a guessed NTZ
-    // schema over int64-ns files fails at runtime mid-stream, the worst
-    // place. Callers starting a stream on a not-yet-populated directory
-    // must declare the form explicitly via `tsType`.
-    val resolved = tsType.getOrElse(
-      scala.util.Try(spark.read.parquet(dir).schema("ts").dataType).getOrElse(
+    // physical ts form from one footer on the driver (the batch loaders'
+    // helper, no Spark job), then apply the same normalization as the
+    // batch reader. The probe CANNOT silently fall back on failure: the
+    // directory may be empty at stream start and fill later with the
+    // OTHER physical form — a guessed NTZ schema over int64-ns
+    // files fails at runtime mid-stream, the worst place. Callers starting
+    // a stream on a not-yet-populated directory must declare the form
+    // explicitly via `tsType`.
+    val resolved = tsType.getOrElse {
+      try graft.Tables.parquetSchema(spark, dir)("ts").dataType
+      catch { case scala.util.control.NonFatal(e) =>
         throw new IllegalArgumentException(
           s"readEvents: cannot probe the physical ts type of $dir (empty or " +
             "unreadable). Pass tsType explicitly — Some(TimestampNTZType) for " +
             "untagged-us testdata, Some(LongType) for legacy TIMESTAMP(NANOS) " +
-            "files read under nanosAsLong.")))
+            "files read under nanosAsLong.", e)
+      }
+    }
     graft.Tables.normalizeEventTs(
       spark.readStream.schema(eventsRawSchema(resolved)).parquet(dir))
   }

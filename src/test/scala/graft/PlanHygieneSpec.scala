@@ -14,6 +14,29 @@ class PlanHygieneSpec extends SparkSpec {
     }
   }
 
+  test("a warm query build starts no Spark job, except the declared fits and samples") {
+    // building a query is planning, not execution: a job started while a
+    // builder runs is paid again on every build of that query (the loaders'
+    // schema-inference job was one, ~80 ms per table). The first build of
+    // each query also builds the session memos; the second must start no
+    // job at all, except in the builders that fit a model or draw a sample
+    // to shape the plan
+    val fitsOrSamples = Set("ann_ivf", "doc_pack_chunks", "doc_stratified_sample",
+      "ts_adding_problem", "ts_kmeans_embed", "ts_logreg_embed", "ts_rul_pipeline")
+    SparkEntry.queries.values.foreach(_(spark, sf))
+    val started = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      val (_, jobs) = JobProbe(spark)(fn(spark, sf))
+      if (jobs.isEmpty) None else Some(name -> jobs.size)
+    }
+    val unexpected = started.filterNot { case (n, _) => fitsOrSamples(n) }
+    assert(unexpected.isEmpty,
+      s"query builders started Spark jobs: ${unexpected.mkString(", ")}")
+    // a builder that stopped fitting or sampling leaves the set, so the
+    // guard covers it again
+    val stale = fitsOrSamples -- started.map(_._1)
+    assert(stale.isEmpty, s"declared builders start no job any more: $stale")
+  }
+
   test("per-trajectory window suite plans exactly one exchange") {
     // SURVEY §3.5: all frame computations of a ts_* query share the single
     // hashpartitioning(user_id) shuffle — a second Exchange means a window

@@ -42,6 +42,19 @@ class StreamingSpec extends SparkSpec {
     assert(want.exceptAll(got).count() == 0)
   }
 
+  test("readEvents probes ts from one footer: no job; an empty dir fails with the cause attached") {
+    val (stream, jobs) = JobProbe(spark)(StreamingOps.readEvents(spark, eventsDir))
+    assert(jobs.isEmpty, s"readEvents started ${jobs.size} Spark job(s)")
+    assert(stream.isStreaming && stream.schema("ts").dataType ==
+      org.apache.spark.sql.types.TimestampType)
+    val empty = java.nio.file.Files.createTempDirectory("events_empty").toString
+    val e = intercept[IllegalArgumentException](StreamingOps.readEvents(spark, empty))
+    assert(e.getMessage.contains(s"cannot probe the physical ts type of $empty"),
+      e.getMessage)
+    assert(e.getCause != null && e.getCause.getMessage.contains(empty),
+      s"probe failure lost its cause: ${e.getCause}")
+  }
+
   test("streaming sessionization emits the same closed sessions as batch") {
     val batchSessions = operators.TimeSeriesQueries.tsSessionize(spark, sf)
     // replay events as a stream of Ev

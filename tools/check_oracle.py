@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's DuckDB correctness gate.
 
-Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir> [--json <file>]
 
 Reads each <verifyOutDir>/<name> parquet (Spark result), runs the matching
 oracle SQL from <verifyOutDir>/oracle_sql.json in DuckDB with the sfDir
@@ -13,8 +13,12 @@ sorted; float columns compared on their IEEE-754 bit patterns, so a
 Spark +0.0 vs DuckDB -0.0 fails here exactly as it fails the driver's
 byte-sensitive hash — the prior rtol=1e-9 comparison let the r3
 ts_stl_decompose sign-of-zero mismatch ship).
+
+--json <file> also writes the per-query verdict (pass / fail / no_oracle)
+and the counts. no_oracle lists the queries Verify ran (its timings.json)
+that have no oracle SQL: the spec-only ones.
 """
-import sys, os, json, glob
+import argparse, sys, os, json, glob
 import duckdb
 import pandas as pd
 import numpy as np
@@ -47,26 +51,26 @@ def bitwise_float_diff(got: pd.DataFrame, want: pd.DataFrame):
             return c, int(bad.sum()), i
     return None
 
-def main(sf_dir, out_dir):
+def main(sf_dir, out_dir, json_path=None):
     con = duckdb.connect()
     for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    n_pass = n_fail = 0
+    verdicts = {}
     for name, sql in sorted(oracle.items()):
         res_dir = f"{out_dir}/{name}"
         files = glob.glob(f"{res_dir}/*.parquet")
         if not files:
-            print(f"FAIL {name}: no spark output"); n_fail += 1; continue
+            print(f"FAIL {name}: no spark output"); verdicts[name] = "fail"; continue
         try:
             got = canon(pd.concat([pd.read_parquet(f) for f in sorted(files)]))
             want = canon(con.execute(sql).fetchdf())
         except Exception as e:
-            print(f"FAIL {name}: {e}"); n_fail += 1; continue
+            print(f"FAIL {name}: {e}"); verdicts[name] = "fail"; continue
         if list(got.columns) != list(want.columns):
-            print(f"FAIL {name}: columns {list(got.columns)} vs {list(want.columns)}"); n_fail += 1; continue
+            print(f"FAIL {name}: columns {list(got.columns)} vs {list(want.columns)}"); verdicts[name] = "fail"; continue
         # dtype-family parity (mirrors the driver's type-sensitive hash):
         # int64 vs float64 is a mismatch even when every value is equal.
         fam = lambda dt: ("int" if dt.kind in "iu" else
@@ -75,9 +79,9 @@ def main(sf_dir, out_dir):
         badty = [(c, got[c].dtype, want[c].dtype) for c in got.columns
                  if fam(got[c].dtype) != fam(want[c].dtype)]
         if badty:
-            print(f"FAIL {name}: dtype family mismatch {badty}"); n_fail += 1; continue
+            print(f"FAIL {name}: dtype family mismatch {badty}"); verdicts[name] = "fail"; continue
         if len(got) != len(want):
-            print(f"FAIL {name}: rows {len(got)} vs {len(want)}"); n_fail += 1; continue
+            print(f"FAIL {name}: rows {len(got)} vs {len(want)}"); verdicts[name] = "fail"; continue
         # non-float columns (ints/strings/timestamps) compared EXACTLY —
         # a tolerant assert_frame_equal applies rtol to integer dtypes too
         # under pandas 2.x, which would let a drifting int64 epoch/count/id
@@ -89,7 +93,7 @@ def main(sf_dir, out_dir):
                 pd.testing.assert_frame_equal(got[nonf], want[nonf],
                                               check_dtype=False, check_exact=True)
         except AssertionError as e:
-            print(f"FAIL {name}: value mismatch\n{str(e)[:500]}"); n_fail += 1; continue
+            print(f"FAIL {name}: value mismatch\n{str(e)[:500]}"); verdicts[name] = "fail"; continue
         # float columns byte-exact (the driver hashes raw bytes; -0.0 != +0.0)
         bit = bitwise_float_diff(got, want)
         if bit is not None:
@@ -97,10 +101,34 @@ def main(sf_dir, out_dir):
             print(f"FAIL {name}: bitwise float mismatch col={c} rows={nbad} "
                   f"first@{i}: spark={got[c].iloc[i]!r} oracle={want[c].iloc[i]!r} "
                   f"(signbit {np.signbit(got[c].iloc[i])} vs {np.signbit(want[c].iloc[i])})")
-            n_fail += 1; continue
-        print(f"PASS {name} ({len(got)} rows)"); n_pass += 1
-    print(f"\n{n_pass} pass, {n_fail} fail")
+            verdicts[name] = "fail"; continue
+        print(f"PASS {name} ({len(got)} rows)"); verdicts[name] = "pass"
+    # queries Verify ran without an oracle: spec-only if they wrote output
+    timings = f"{out_dir}/timings.json"
+    ran = json.load(open(timings)) if os.path.exists(timings) else {}
+    for name in sorted(set(ran) - set(verdicts)):
+        if name.startswith("_"):
+            continue
+        if glob.glob(f"{out_dir}/{name}/*.parquet"):
+            verdicts[name] = "no_oracle"
+        else:
+            print(f"FAIL {name}: no spark output"); verdicts[name] = "fail"
+    counts = {k: sum(v == k for v in verdicts.values())
+              for k in ("pass", "fail", "no_oracle")}
+    n_fail = counts["fail"]
+    print(f"\n{counts['pass']} pass, {n_fail} fail, {counts['no_oracle']} no_oracle")
+    if json_path:
+        with open(json_path, "w") as f:
+            json.dump({"counts": counts, "queries": dict(sorted(verdicts.items()))},
+                      f, indent=1)
+            f.write("\n")
     return 1 if n_fail else 0
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("sf_dir")
+    ap.add_argument("out_dir")
+    ap.add_argument("--json", dest="json_path",
+                    help="write per-query pass/fail/no_oracle and counts here")
+    a = ap.parse_args()
+    sys.exit(main(a.sf_dir, a.out_dir, a.json_path))
