@@ -12,8 +12,11 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // same backstop as Bench: reclaim dropped checkpoint blocks within
-      // the session instead of Spark's 30-min default periodic GC
+      // reclaim dropped checkpoint blocks within the few-minute run
+      // instead of Spark's 30-min default periodic GC. Bench sets 10min
+      // and calls System.gc() itself between queries, because a periodic
+      // GC landing inside a timed rep skews it; Verify times each query
+      // once, only as a drift record, so it takes the frequent GC
       .config("spark.cleaner.periodicGC.interval", "1min")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -26,32 +29,17 @@ object Verify {
     // committed VERIFY_TIMINGS_r{N}.json lets future rounds diff
     // correctness-path drift the same way BENCH_r{N}.json diffs the bench
     val timings = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    val tIdx0 = System.nanoTime()
-    // the shared cluster index builds lazily inside the first dedup query;
-    // pre-build it here so its cost is its own timing line, not silently
-    // folded into whichever dedup query runs first
-    try graft.operators.Dedup.clusterIndex(spark, sfDir, threshold = 0.5).count()
-    catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[verify] cluster-index build failed: ${e.getMessage}")
+    // each session artifact would build lazily inside the first query
+    // that reads it; pre-build them here so each cost is its own timing
+    // line, not silently folded into that query's
+    SparkEntry.sessionArtifacts.foreach { case (name, build) =>
+      val t0 = System.nanoTime()
+      try build(spark, sfDir)
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[verify] $name build failed: ${e.getMessage}")
+      }
+      timings += s"_${name.replace('-', '_')}_build" -> (System.nanoTime() - t0) / 1e9
     }
-    timings += "_cluster_index_build" -> (System.nanoTime() - tIdx0) / 1e9
-    // same visibility for the curation recipe's session build (its
-    // near-dup fixpoint runs eagerly here, not inside the query's
-    // parquet-dump timing)
-    val tRcp0 = System.nanoTime()
-    try graft.operators.Curation.curationRecipeQuery(spark, sfDir)
-    catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[verify] curation-recipe build failed: ${e.getMessage}")
-    }
-    timings += "_curation_recipe_build" -> (System.nanoTime() - tRcp0) / 1e9
-    // and the daily-increment query's session build (two label fixpoints:
-    // the corpus index and the increment's own — r15)
-    val tInc0 = System.nanoTime()
-    try graft.operators.Curation.curationIncrementQuery(spark, sfDir)
-    catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[verify] curation-increment build failed: ${e.getMessage}")
-    }
-    timings += "_curation_increment_build" -> (System.nanoTime() - tInc0) / 1e9
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val t0 = System.nanoTime()
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

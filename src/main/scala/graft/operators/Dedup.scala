@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{SessionArtifacts, Tables}
 
 /** Deduplication family for large-scale corpus curation (SURVEY.md §2.3).
   *
@@ -960,45 +960,17 @@ object Dedup {
     * final label checkpoint alive for the session (one bounded block set:
     * two longs per edge-incident vertex); everything else the build
     * materializes is freed eagerly by [[dedupClusters]]'s hygiene path.
-    * Keyed by applicationId so a new SparkContext can never read another
-    * session's (dead) checkpoint blocks. The standalone
+    * [[graft.SessionArtifacts]] owns the memo mechanics, cold mode and
+    * the executor-loss policy. The standalone
     * [[dedupClusters]](docs, threshold) API is untouched for callers that
     * want an uncached one-shot run.
     */
-  private val indexCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Double), (SparkSession, DataFrame)]()
-
-  /** Cold-measurement toggle: true when the bench (or a spec) wants every
-    * consumer to pay the true per-query cost instead of reading the
-    * session index. Env var for the bench harness; the system property
-    * exists so an in-JVM spec can exercise the bypass path (env cannot be
-    * set after JVM start). */
-  def coldMode: Boolean =
-    sys.props.get("graft.cold").orElse(sys.env.get("SPARK_GRAFT_COLD"))
-      .contains("1")
-
   def clusterIndex(spark: SparkSession, sfDir: String,
-                   threshold: Double): DataFrame = {
-    // cold-measurement escape hatch: the memo is bypassed so the first
-    // consumer cannot hide the build cost from the others
-    if (coldMode)
-      return dedupClusters(Tables.documents(spark, sfDir), threshold)
-    // entries of stopped contexts can never be hit again (appId key) —
-    // drop them so a JVM that cycles sessions doesn't pin dead object
-    // graphs for its lifetime
-    indexCache.entrySet.removeIf(e => e.getValue._1.sparkContext.isStopped)
-    // build-then-putIfAbsent rather than computeIfAbsent: the build runs
-    // multi-minute Spark jobs and must not hold a map bin lock for their
-    // duration (a concurrent same-bin caller would stall). A lost race
-    // means one duplicate build whose final checkpoint the ContextCleaner
-    // reclaims — benign.
-    val k = (spark.sparkContext.applicationId, sfDir, threshold)
-    Option(indexCache.get(k)).map(_._2).getOrElse {
-      val built = (spark, dedupClusters(Tables.documents(spark, sfDir), threshold))
-      val prev = indexCache.putIfAbsent(k, built)
-      (if (prev != null) prev else built)._2
+                   threshold: Double): DataFrame =
+    SessionArtifacts.getOrBuild(spark, s"cluster-index:$sfDir:$threshold") { _ =>
+      (dedupClusters(Tables.documents(spark, sfDir), threshold),
+        SessionArtifacts.nothingToRelease)
     }
-  }
 
   /** Session-scoped md5-shingle index: the persisted (doc_id, sh) frame
     * over the documents corpus that [[dedupMinhash]] and [[dedupNgram]]
@@ -1007,32 +979,22 @@ object Dedup {
     * buckets, two attach joins, n_shingles); the r20 disposition kept the
     * recompute-per-branch trade because a lazy gated return cannot own a
     * per-call persist (the FuzzyJoin PersistHandle lesson). This is the
-    * r20 verdict's prescribed resolution (#5): SESSION ownership, exactly
-    * like [[clusterIndex]] / the curation session states — built once per
-    * (app, sfDir), corpus-snapshot input, the bench pays the build
-    * visibly in its amortized pre-build block, and `SPARK_GRAFT_COLD=1`
-    * bypasses the memo so every cold evaluation pays the true inline
-    * derivation (and reproduces the pre-r21 plan verbatim). */
-  def md5ShingleIndex(spark: SparkSession, sfDir: String): DataFrame = {
-    def derive(): DataFrame =
-      Tables.documentsKernel(spark, sfDir)
+    * r20 verdict's prescribed resolution (#5): SESSION ownership through
+    * [[graft.SessionArtifacts]], like [[clusterIndex]] and the curation
+    * session states — built once per (app, sfDir), and a cold build is
+    * not persisted, so every cold evaluation pays the true inline
+    * derivation (and reproduces the pre-r21 plan verbatim). A race
+    * loser's persist is unpersisted. */
+  def md5ShingleIndex(spark: SparkSession, sfDir: String): DataFrame =
+    SessionArtifacts.getOrBuild(spark, s"md5-shingle-index:$sfDir") { cold =>
+      val df = Tables.documentsKernel(spark, sfDir)
         .select(col("doc_id"), md5ShingleHashes(col("text"), 3).as("sh"))
-    if (coldMode) return derive()
-    shingleCache.entrySet.removeIf(e => e.getValue._1.sparkContext.isStopped)
-    val k = (spark.sparkContext.applicationId, sfDir)
-    Option(shingleCache.get(k)).map(_._2).getOrElse {
-      val df = derive()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val prev = shingleCache.putIfAbsent(k, (spark, df))
-      // race loser: drop the duplicate persist registration (nothing was
-      // materialized yet — unpersist of an uncomputed frame is a no-op
-      // beyond deregistration)
-      if (prev != null) { df.unpersist(blocking = false); prev._2 } else df
+      if (cold) (df, SessionArtifacts.nothingToRelease)
+      else {
+        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        (df, () => df.unpersist(blocking = false))
+      }
     }
-  }
-
-  private val shingleCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (SparkSession, DataFrame)]()
 
   // ---------- SparkEntry glue ----------
 

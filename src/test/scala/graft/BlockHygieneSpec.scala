@@ -26,25 +26,12 @@ class BlockHygieneSpec extends SparkSpec {
        "(sole sanctioned survivors: the session cluster-index checkpoint " +
        "and the session curation recipe + increment state)") {
     val sc = spark.sparkContext
-    // Build (or memo-hit) the session-scoped state first: the shared
-    // cluster index's single final label checkpoint (shared by
-    // dedup_clusters / dedup_canonical_best / pipeline_curation) and the
-    // curation recipe's fixpoint checkpoint + four persisted stage
-    // frames (r14 — the recipe's near-dup fixpoint leaves a truncated-
-    // lineage checkpoint that cannot be freed before materialization, so
-    // the gated query is session-scoped like the index; see
-    // Curation.curationRecipeQuery's scaladoc). Baselining AFTER the
-    // builds means every query must come out clean.
-    graft.operators.Dedup.clusterIndex(spark, sf, threshold = 0.5).count()
-    graft.operators.Curation.curationRecipeQuery(spark, sf).count()
-    // the daily-increment query is session-scoped too (r15): its corpus
-    // index + increment fixpoint checkpoints and persisted stage frames
-    // are sanctioned survivors exactly like the recipe's
-    graft.operators.Curation.curationIncrementQuery(spark, sf).count()
-    // r21: the session md5-shingle index (one persisted (doc_id, sh)
-    // frame shared by dedup_minhash / dedup_ngram — the r20 verdict's
-    // #5 item) is sanctioned session state like the above
-    graft.operators.Dedup.md5ShingleIndex(spark, sf).count()
+    // Build (or memo-hit) every session artifact first (the shared
+    // cluster index's single final label checkpoint, the curation recipe
+    // and increment fixpoint checkpoints and pinned stage frames, the
+    // persisted md5-shingle index — see graft.SessionArtifacts).
+    // Baselining AFTER the builds means every query must come out clean.
+    SparkEntry.sessionArtifacts.foreach { case (_, build) => build(spark, sf) }
     val baseline = sc.getPersistentRDDs.keySet
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       fn(spark, sf).count()

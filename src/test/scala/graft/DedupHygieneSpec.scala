@@ -66,6 +66,65 @@ class DedupHygieneSpec extends SparkSpec {
     assert(Dedup.clusterIndex(spark, sf, threshold = 0.5) eq warm1)
   }
 
+  test("cold mode matches the warm memo for every session artifact, and " +
+       "holds at most one cold build of the curation states") {
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    import graft.operators.{Curation, TextOps}
+    // each artifact's public entry point: the memoized value and the
+    // frame whose rows are compared; the gate models' rows are read
+    // through the query they feed
+    def itself(f: (SparkSession, String) => DataFrame) =
+      (s: SparkSession, d: String) => { val df = f(s, d); (df: AnyRef, df) }
+    val entryPoints: Seq[(String, (SparkSession, String) => (AnyRef, DataFrame))] = Seq(
+      ("cluster-index", itself(Dedup.clusterIndex(_, _, threshold = 0.5))),
+      ("md5-shingle-index", itself(Dedup.md5ShingleIndex)),
+      ("gate-models", (s, d) =>
+        (TextOps.gateModels(s, d), TextOps.curationGateQuery(s, d))),
+      ("curation-recipe", itself(Curation.curationRecipeQuery)),
+      ("curation-increment", itself(Curation.curationIncrementQuery)))
+    assert(entryPoints.map(_._1) == SparkEntry.sessionArtifacts.map(_._1),
+      "every session artifact needs a cold-versus-warm case")
+    def rows(df: DataFrame): Map[Seq[Any], Int] =
+      df.collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+    val sc = spark.sparkContext
+    entryPoints.foreach { case (name, f) =>
+      val (warm, warmFrame) = f(spark, sf)
+      val warmRows = rows(warmFrame)
+      val before = sc.getPersistentRDDs.keySet
+      // a method of its own, so no stack slot keeps the cold frame (and
+      // its label checkpoints) reachable once it returns
+      def checkCold(): Unit = {
+        val (cold, coldFrame) = f(spark, sf)
+        assert(!(cold eq warm), s"$name: cold mode must bypass the memo")
+        assert(rows(coldFrame) == warmRows, s"$name: cold rows diverged from the warm memo")
+      }
+      sys.props("graft.cold") = "1"
+      try {
+        checkCold()
+        if (name.startsWith("curation-")) {
+          // one cold build's footprint, then a second cold build: closing
+          // the first build's handle must keep the session at one build's
+          // frames (its label checkpoints go when GC drops the frame)
+          val oneBuild = (sc.getPersistentRDDs.keySet -- before).size
+          checkCold()
+          val deadline = System.nanoTime() + 30e9.toLong
+          def extra = (sc.getPersistentRDDs.keySet -- before).size
+          while (extra > oneBuild && System.nanoTime() < deadline) {
+            System.gc(); Thread.sleep(200)
+          }
+          assert(extra <= oneBuild, s"$name: two cold builds hold $extra " +
+            s"persistent RDDs beyond the baseline, one build holds $oneBuild")
+        }
+      } finally {
+        sys.props.remove("graft.cold")
+        // free what the cold builds left: no consumer reads them again
+        (sc.getPersistentRDDs.keySet -- before)
+          .foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(true)))
+      }
+      assert(f(spark, sf)._1 eq warm, s"$name: the warm memo must survive cold mode")
+    }
+  }
+
   test("componentLabels frees every block set on the non-convergence error path") {
     val ss = TestSpark.spark
     import ss.implicits._

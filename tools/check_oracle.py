@@ -14,11 +14,12 @@ Spark +0.0 vs DuckDB -0.0 fails here exactly as it fails the driver's
 byte-sensitive hash — the prior rtol=1e-9 comparison let the r3
 ts_stl_decompose sign-of-zero mismatch ship).
 
---json <file> also writes the per-query verdict (pass / fail / no_oracle)
-and the counts. no_oracle lists the queries Verify ran (its timings.json)
-that have no oracle SQL: the spec-only ones.
+--json <file> also writes the per-query verdict (pass / fail / no_oracle),
+the counts, and under "seconds" each query's DuckDB execution time (also
+printed on its PASS/FAIL line). no_oracle lists the queries Verify ran
+(its timings.json) that have no oracle SQL: the spec-only ones.
 """
-import argparse, sys, os, json, glob
+import argparse, sys, os, json, glob, time
 import duckdb
 import pandas as pd
 import numpy as np
@@ -58,19 +59,23 @@ def main(sf_dir, out_dir, json_path=None):
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    verdicts = {}
+    verdicts, seconds = {}, {}
     for name, sql in sorted(oracle.items()):
         res_dir = f"{out_dir}/{name}"
         files = glob.glob(f"{res_dir}/*.parquet")
         if not files:
-            print(f"FAIL {name}: no spark output"); verdicts[name] = "fail"; continue
+            print(f"FAIL {name}: no spark output", flush=True); verdicts[name] = "fail"; continue
         try:
             got = canon(pd.concat([pd.read_parquet(f) for f in sorted(files)]))
-            want = canon(con.execute(sql).fetchdf())
+            t0 = time.monotonic()
+            want = con.execute(sql).fetchdf()
+            seconds[name] = round(time.monotonic() - t0, 3)
+            want = canon(want)
         except Exception as e:
-            print(f"FAIL {name}: {e}"); verdicts[name] = "fail"; continue
+            print(f"FAIL {name}: {e}", flush=True); verdicts[name] = "fail"; continue
+        took = f"[{seconds[name]:.1f} s]"
         if list(got.columns) != list(want.columns):
-            print(f"FAIL {name}: columns {list(got.columns)} vs {list(want.columns)}"); verdicts[name] = "fail"; continue
+            print(f"FAIL {name} {took}: columns {list(got.columns)} vs {list(want.columns)}", flush=True); verdicts[name] = "fail"; continue
         # dtype-family parity (mirrors the driver's type-sensitive hash):
         # int64 vs float64 is a mismatch even when every value is equal.
         fam = lambda dt: ("int" if dt.kind in "iu" else
@@ -79,9 +84,9 @@ def main(sf_dir, out_dir, json_path=None):
         badty = [(c, got[c].dtype, want[c].dtype) for c in got.columns
                  if fam(got[c].dtype) != fam(want[c].dtype)]
         if badty:
-            print(f"FAIL {name}: dtype family mismatch {badty}"); verdicts[name] = "fail"; continue
+            print(f"FAIL {name} {took}: dtype family mismatch {badty}", flush=True); verdicts[name] = "fail"; continue
         if len(got) != len(want):
-            print(f"FAIL {name}: rows {len(got)} vs {len(want)}"); verdicts[name] = "fail"; continue
+            print(f"FAIL {name} {took}: rows {len(got)} vs {len(want)}", flush=True); verdicts[name] = "fail"; continue
         # non-float columns (ints/strings/timestamps) compared EXACTLY —
         # a tolerant assert_frame_equal applies rtol to integer dtypes too
         # under pandas 2.x, which would let a drifting int64 epoch/count/id
@@ -93,16 +98,17 @@ def main(sf_dir, out_dir, json_path=None):
                 pd.testing.assert_frame_equal(got[nonf], want[nonf],
                                               check_dtype=False, check_exact=True)
         except AssertionError as e:
-            print(f"FAIL {name}: value mismatch\n{str(e)[:500]}"); verdicts[name] = "fail"; continue
+            print(f"FAIL {name} {took}: value mismatch\n{str(e)[:500]}", flush=True); verdicts[name] = "fail"; continue
         # float columns byte-exact (the driver hashes raw bytes; -0.0 != +0.0)
         bit = bitwise_float_diff(got, want)
         if bit is not None:
             c, nbad, i = bit
-            print(f"FAIL {name}: bitwise float mismatch col={c} rows={nbad} "
+            print(f"FAIL {name} {took}: bitwise float mismatch col={c} rows={nbad} "
                   f"first@{i}: spark={got[c].iloc[i]!r} oracle={want[c].iloc[i]!r} "
-                  f"(signbit {np.signbit(got[c].iloc[i])} vs {np.signbit(want[c].iloc[i])})")
+                  f"(signbit {np.signbit(got[c].iloc[i])} vs {np.signbit(want[c].iloc[i])})",
+                  flush=True)
             verdicts[name] = "fail"; continue
-        print(f"PASS {name} ({len(got)} rows)"); verdicts[name] = "pass"
+        print(f"PASS {name} ({len(got)} rows) {took}", flush=True); verdicts[name] = "pass"
     # queries Verify ran without an oracle: spec-only if they wrote output
     timings = f"{out_dir}/timings.json"
     ran = json.load(open(timings)) if os.path.exists(timings) else {}
@@ -119,8 +125,8 @@ def main(sf_dir, out_dir, json_path=None):
     print(f"\n{counts['pass']} pass, {n_fail} fail, {counts['no_oracle']} no_oracle")
     if json_path:
         with open(json_path, "w") as f:
-            json.dump({"counts": counts, "queries": dict(sorted(verdicts.items()))},
-                      f, indent=1)
+            json.dump({"counts": counts, "queries": dict(sorted(verdicts.items())),
+                       "seconds": seconds}, f, indent=1)
             f.write("\n")
     return 1 if n_fail else 0
 
