@@ -56,12 +56,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         builder))
 
     // native plan strategies (tier (c) operators) — the Column-API entry
-    // points (plans.Ewma / plans.AsofJoin) install these lazily into
-    // `experimental.extraStrategies`, but a conf-configured session gets
-    // them up front so pre-built AsofJoinNode/EwmaNode plans are always
-    // plannable
+    // points (plans.Ewma / plans.AsofJoin / plans.SharedShuffle) install
+    // these lazily into `experimental.extraStrategies`, but a
+    // conf-configured session gets them up front so pre-built
+    // AsofJoinNode/EwmaNode/SharedShuffleNode plans are always plannable
     e.injectPlannerStrategy(_ => graft.plans.EwmaStrategy)
     e.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
+    e.injectPlannerStrategy(_ => graft.plans.SharedShuffleStrategy)
 
     inject("graft_cosine", exprs => CosineSimilarity(exprs(0), exprs(1)))
     inject("graft_dist_sq", exprs => DistSq(exprs(0), exprs(1)))

@@ -24,7 +24,9 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   *     z = (x−m)/sd (normalize_data, population std);
   * and the window's T×F values are interleaved row-major (time, feature).
   * Labels: `widx = (e−t)/skip`, `rul = min(rulCap, n−e)`. A trajectory
-  * shorter than `t` emits no window.
+  * shorter than `t` or than `minLen` emits no window (`minLen = t` is the
+  * plain rule; the padded callers pass `t·skip`, the length below which
+  * their pad branch takes the trajectory instead).
   *
   * Every floating-point step is the same operation in the same order as
   * the per-row formulation it replaces (max-scale division, sequential
@@ -37,7 +39,7 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * Called once per trajectory, never per row, so interpreted evaluation
   * ([[CodegenFallback]]) costs nothing measurable. */
 case class WindowTensors(child: Expression, nOrder: Int, names: Seq[String],
-    settings: Seq[Boolean], t: Int, skip: Int, rulCap: Int)
+    settings: Seq[Boolean], t: Int, skip: Int, rulCap: Int, minLen: Int)
     extends UnaryExpression with CodegenFallback {
 
   require(t >= 1, "window length t must be >= 1")
@@ -62,7 +64,7 @@ case class WindowTensors(child: Expression, nOrder: Int, names: Seq[String],
   override def nullSafeEval(input: Any): Any = {
     val pts = input.asInstanceOf[ArrayData]
     val n = pts.numElements()
-    if (n < t) return new GenericArrayData(Array.empty[Any])
+    if (n < t || n < minLen) return new GenericArrayData(Array.empty[Any])
     // scaled values, one column per feature
     val s = Array.ofDim[Double](nF, n)
     var i = 0
@@ -151,7 +153,8 @@ object WindowTensors {
     StructField("rul", LongType, nullable = false))), containsNull = false)
 
   def apply(points: Column, nOrder: Int, names: Seq[String],
-            settings: Seq[Boolean], t: Int, skip: Int, rulCap: Int): Column =
+            settings: Seq[Boolean], t: Int, skip: Int, rulCap: Int,
+            minLen: Int): Column =
     ColumnBridge.column(WindowTensors(ColumnBridge.expression(points),
-      nOrder, names, settings, t, skip, rulCap))
+      nOrder, names, settings, t, skip, rulCap, minLen))
 }

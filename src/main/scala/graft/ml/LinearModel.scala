@@ -110,7 +110,11 @@ object LinearModel {
     * hidden ~24 s task load that surfaced as the r6/r7 driver-bench
     * "spikes on untouched code" (9.95/4.72 s) whenever the box was
     * contended. The sufficient-statistics form removes the second pass
-    * entirely, so there is nothing left to cache. */
+    * entirely, so there is nothing left to cache. A caller that does run
+    * two passes over one tensor frame (fit, then score) no longer needs a
+    * cache either: the frame is planned once ([[Tensorize]]), so the
+    * second pass reads the first one's shuffle output — no scan, no
+    * columnar cache build, nothing persisted. */
   def rulPipeline(spark: SparkSession, sfDir: String): DataFrame = {
     val events = Tables.events(spark, sfDir)
       .withColumn("ts_us", unix_micros(col("ts")))

@@ -309,7 +309,7 @@ object Curation {
       |  WHERE doc_id NOT IN (SELECT doc_id FROM exd)),
       |${Dedup.md5MinhashPairsCtesFrom("s1")},
       |strong AS (SELECT doc_id_a, doc_id_b FROM pairs WHERE jaccard >= 0.5),
-      |edges AS (SELECT doc_id_a AS src, doc_id_b AS dst FROM strong
+      |edges AS MATERIALIZED (SELECT doc_id_a AS src, doc_id_b AS dst FROM strong
       |          UNION SELECT doc_id_b, doc_id_a FROM strong),
       |reach(v, l) AS (
       |  SELECT doc_id, doc_id FROM s1
@@ -708,7 +708,7 @@ object Curation {
       |strong AS (SELECT doc_id_a, doc_id_b FROM pairs WHERE jaccard >= 0.5),
       |-- frozen corpus labels: the dedup_clusters closure over the
       |-- corpus-corpus restriction
-      |cedges AS (
+      |cedges AS MATERIALIZED (
       |  SELECT doc_id_a AS src, doc_id_b AS dst FROM strong
       |  WHERE doc_id_a % 2 = 0 AND doc_id_b % 2 = 0
       |  UNION SELECT doc_id_b, doc_id_a FROM strong
@@ -720,7 +720,7 @@ object Curation {
       |oldlab AS (SELECT v AS doc_id, min(l) AS cluster_id
       |           FROM creach GROUP BY v),
       |-- increment components: the fixpoint over the batch only
-      |bedges AS (
+      |bedges AS MATERIALIZED (
       |  SELECT doc_id_a AS src, doc_id_b AS dst FROM strong
       |  WHERE doc_id_a % 2 = 1 AND doc_id_b % 2 = 1
       |  UNION SELECT doc_id_b, doc_id_a FROM strong

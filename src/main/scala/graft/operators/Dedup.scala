@@ -983,18 +983,29 @@ object Dedup {
     * [[graft.SessionArtifacts]], like [[clusterIndex]] and the curation
     * session states — built once per (app, sfDir), and a cold build is
     * not persisted, so every cold evaluation pays the true inline
-    * derivation (and reproduces the pre-r21 plan verbatim). A race
-    * loser's persist is unpersisted. */
+    * derivation (and reproduces the pre-r21 plan verbatim).
+    *
+    * The cache matches frames by plan, which sets two rules here:
+    *  - No build has anything to release. A race loser's `persist` of the
+    *    winner's plan registers nothing, and its `unpersist` would drop
+    *    the one entry both frames share, the winner's.
+    *  - A cold build must not read a warm index of the same session. Its
+    *    scan carries a `Filter(true)`, so no cached plan equals any part
+    *    of it; the optimizer then removes the filter, and the executed
+    *    plan is the uncached one. */
   def md5ShingleIndex(spark: SparkSession, sfDir: String): DataFrame =
-    SessionArtifacts.getOrBuild(spark, s"md5-shingle-index:$sfDir") { cold =>
-      val df = Tables.documentsKernel(spark, sfDir)
-        .select(col("doc_id"), md5ShingleHashes(col("text"), 3).as("sh"))
-      if (cold) (df, SessionArtifacts.nothingToRelease)
-      else {
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (df, () => df.unpersist(blocking = false))
-      }
-    }
+    SessionArtifacts.getOrBuild(spark, s"md5-shingle-index:$sfDir")(
+      md5ShingleBuild(spark, sfDir))
+
+  /** The build behind [[md5ShingleIndex]]. */
+  private[graft] def md5ShingleBuild(spark: SparkSession, sfDir: String)(
+      cold: Boolean): (DataFrame, AutoCloseable) = {
+    val docs = Tables.documentsKernel(spark, sfDir)
+    val df = (if (cold) docs.where(lit(true)) else docs)
+      .select(col("doc_id"), md5ShingleHashes(col("text"), 3).as("sh"))
+    if (!cold) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    (df, SessionArtifacts.nothingToRelease)
+  }
 
   // ---------- SparkEntry glue ----------
 
@@ -1083,7 +1094,7 @@ object Dedup {
       |  SELECT DISTINCT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b
       |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
       |    AND a.doc_id < b.doc_id),
-      |pairs AS (
+      |pairs AS MATERIALIZED (
       |  SELECT doc_id_a, doc_id_b,
       |    round(CAST(len(list_intersect(x.sh, y.sh)) AS DOUBLE)
       |      / (len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh))), 6) AS jaccard
@@ -1178,7 +1189,7 @@ object Dedup {
   val clustersCtes: String =
     s"""WITH RECURSIVE $md5MinhashPairsCtes,
        |strong AS (SELECT doc_id_a, doc_id_b FROM pairs WHERE jaccard >= 0.5),
-       |edges AS (SELECT doc_id_a AS src, doc_id_b AS dst FROM strong
+       |edges AS MATERIALIZED (SELECT doc_id_a AS src, doc_id_b AS dst FROM strong
        |          UNION SELECT doc_id_b, doc_id_a FROM strong),
        |reach(v, l) AS (
        |  SELECT doc_id, doc_id FROM documents

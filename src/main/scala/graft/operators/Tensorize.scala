@@ -19,6 +19,25 @@ import graft.Tables
   * that one hash exchange on the key, at any scale. Per-key memory is the
   * sorted trajectory, n × (|order| + F) values — the same order as the
   * unbounded `max().over(key)` frame buffer of a window formulation.
+  *
+  * The tensor frame is planned once, when it is built
+  * ([[graft.plans.SharedShuffle]]): the groupBy → kernel → `inline`
+  * subplan is planned without adaptive execution and its RDD is built
+  * then, which starts no job. Every action over the frame, or over any
+  * frame derived from it, reads that one RDD, so they share one shuffle:
+  * the first action reads the input and writes the map side, later
+  * actions (a fit, then its evaluation) skip that stage. Consequences:
+  *  - AQE neither coalesces nor splits the tensorize exchange; it has
+  *    `spark.sql.shuffle.partitions` partitions, as read at build time.
+  *    AQE still plans everything above it.
+  *  - A conf change after the build does not re-plan the frame; build it
+  *    again to pick the change up.
+  *  - Nothing is cached. After executor loss the missing shuffle output
+  *    is recomputed from lineage, like any shuffle's.
+  *  - The shuffle files live as long as the frame: the ContextCleaner
+  *    deletes them once no frame over it is reachable.
+  *  - `explain` and plan strings show the subplan beneath the
+  *    `SharedShuffle` leaf.
   */
 object Tensorize {
 
@@ -30,8 +49,10 @@ object Tensorize {
     * Output: (key, widx, features: array<double> length T, rul).
     */
   def windowTensorize(df: DataFrame, key: String, order: Seq[String],
-                      valueCol: String, t: Int, skip: Int, rulCap: Int): DataFrame =
-    windowTensorizeMulti(df, key, order, Seq(valueCol), t, skip, rulCap)
+                      valueCol: String, t: Int, skip: Int, rulCap: Int,
+                      minLen: Int = 0): DataFrame =
+    windowTensorizeMulti(df, key, order, Seq(valueCol), t, skip, rulCap,
+      minLen = minLen)
 
   /** Multi-feature variant of [[windowTensorize]] — the reference's
     * (N, T, F) tensors with F = several sensor/setting columns
@@ -48,18 +69,20 @@ object Tensorize {
     * Values are cast to double before scaling. A null value or a column
     * whose trajectory max is 0 fails the query with a named error
     * (TENSORIZE_NULL_VALUE / TENSORIZE_ZERO_MAX); a trajectory shorter
-    * than `t` emits no window; null keys form their own trajectory. */
+    * than `t`, or than `minLen` when that is larger, emits no window;
+    * null keys form their own trajectory. */
   def windowTensorizeMulti(df: DataFrame, key: String, order: Seq[String],
                            valueCols: Seq[String], t: Int, skip: Int,
                            rulCap: Int,
-                           settingCols: Set[String] = Set.empty): DataFrame = {
+                           settingCols: Set[String] = Set.empty,
+                           minLen: Int = 0): DataFrame = {
     val point = struct(order.map(col) ++ valueCols.zipWithIndex.map {
       case (c, i) => col(c).cast("double").as(s"_v$i") }: _*)
-    df.groupBy(col(key))
+    graft.plans.SharedShuffle(df.groupBy(col(key))
       .agg(sort_array(collect_list(point)).as("_pts"))
       .select(col(key), inline(graft.functions.WindowTensors(col("_pts"),
         order.length, valueCols, valueCols.map(settingCols.contains),
-        t, skip, rulCap)))
+        t, skip, rulCap, minLen))))
   }
 
   /** music._change_to_seq_len: bring every trajectory to exactly `t` steps —
@@ -151,20 +174,18 @@ object Tensorize {
     * at corpus scale the extra cost is proportional to the short tail, not
     * the table.
     *
-    * The long/short routing is a per-key COUNT AGGREGATE joined back (one
-    * row per trajectory — map-side partials, tiny shuffle; AQE broadcasts
-    * the join at any realistic trajectory cardinality), NOT a
-    * `count().over(key)` window: each branch consumes the routing
-    * predicate separately, so the window form paid a full shuffle+sort of
-    * the fact table PER BRANCH, while the join form's worst case (keys too
-    * big to broadcast) degrades to one hashpartitioning(key) exchange that
-    * the branch's own window/groupBy then reuses. Requires a NON-NULL
-    * trajectory key (true of every source this library ingests); the
-    * exclusion of null-key rows is ENFORCED by an explicit filter below
-    * (and pinned by spec), not left to the equi-join's drop semantics —
-    * the old window form kept such rows as their own partition, and a
-    * silent behavior change on a future null-key source is worse than a
-    * visible contract. */
+    * The long branch routes itself: its kernel takes `minLen = T·skip`,
+    * so a trajectory shorter than that emits no window there. The short
+    * branch's routing is a per-key COUNT AGGREGATE joined back (one row
+    * per trajectory — map-side partials, tiny shuffle; AQE broadcasts the
+    * join at any realistic trajectory cardinality), NOT a
+    * `count().over(key)` window, which paid a full shuffle+sort of the
+    * fact table. Requires a NON-NULL trajectory key (true of every source
+    * this library ingests); the exclusion of null-key rows is ENFORCED by
+    * an explicit filter below (and pinned by spec), not left to the
+    * equi-join's drop semantics — the old window form kept such rows as
+    * their own partition, and a silent behavior change on a future
+    * null-key source is worse than a visible contract. */
   def windowTensorizePadded(df: DataFrame, key: String, order: Seq[String],
                             valueCol: String, t: Int, skip: Int,
                             rulCap: Int): DataFrame = {
@@ -174,9 +195,8 @@ object Tensorize {
     // the scan), so the routing join below never decides their fate
     val in = df.filter(col(key).isNotNull)
     val counts = in.groupBy(col(key)).agg(count(lit(1)).as("n_all"))
-    val long = windowTensorize(
-        in.join(counts.filter(col("n_all") >= padLen).select(col(key)), Seq(key)),
-        key, order, valueCol, t, skip, rulCap)
+    val long = windowTensorize(in, key, order, valueCol, t, skip, rulCap,
+        minLen = padLen)
       .select(col(key), col("widx"),
         col("rul").cast("long").as("rul"),
         (round(array_min(col("features")), 6) + lit(0.0)).as("z_min"),
@@ -364,12 +384,12 @@ object Tensorize {
     val padLen = t * skip
     val in = df.filter(col(key).isNotNull)
     val counts = in.groupBy(col(key)).agg(count(lit(1)).as("n_all"))
-    // long branch: every window, with the UNCAPPED trajectory-relative
-    // label (rulCap = MaxValue disables the inner least; the real cap is
-    // applied once, after the external offset)
-    val long = windowTensorize(
-        in.join(counts.filter(col("n_all") >= padLen).select(col(key)), Seq(key)),
-        key, order, valueCol, t, skip, rulCap = Int.MaxValue)
+    // long branch: every window of a trajectory of at least T·skip
+    // points, with the UNCAPPED trajectory-relative label (rulCap =
+    // MaxValue disables the inner least; the real cap is applied once,
+    // after the external offset)
+    val long = windowTensorize(in, key, order, valueCol, t, skip,
+        rulCap = Int.MaxValue, minLen = padLen)
       .select(col(key), col("widx"), col("features"),
         col("rul").cast("long").as("rel_rul"))
     // short branch: the shared padded-window recurrence

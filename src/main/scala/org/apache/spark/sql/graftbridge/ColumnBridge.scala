@@ -25,4 +25,20 @@ object PlanBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** The frame's optimized plan, planned and prepared the way a subquery
+    * is (`QueryExecution.prepareExecutedPlan`): no adaptive execution,
+    * so the exchanges are final as planned and `execute()` on the result
+    * builds the RDD without running a job. */
+  def prepareWithoutAqe(df: DataFrame): (org.apache.spark.sql.execution.SparkPlan,
+      org.apache.spark.sql.catalyst.plans.logical.Statistics) = {
+    val optimized = df.queryExecution.optimizedPlan
+    (org.apache.spark.sql.execution.QueryExecution.prepareExecutedPlan(
+      df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      optimized), optimized.stats)
+  }
+
+  /** `body` with `spark` as the active session, whose conf planning and
+    * code generation read. */
+  def withActive[T](spark: SparkSession)(body: => T): T = spark.withActive(body)
 }

@@ -125,6 +125,60 @@ class DedupHygieneSpec extends SparkSpec {
     }
   }
 
+  /** A corpus directory of this suite's own (a copy of the documents
+    * table), so its session artifacts and cached plans are unshared. */
+  private def privateCorpus(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-md5-")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sf, "documents.parquet"),
+      dir.resolve("documents.parquet"))
+    dir.toString
+  }
+
+  private def minhashRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toSeq).toSet
+
+  test("a race loser's release leaves the winner's md5-shingle cache in place") {
+    import java.util.concurrent.{CyclicBarrier, Executors, TimeUnit}
+    val dir = privateCorpus()
+    // two first calls, both held inside the build until both have built
+    // and persisted; then one stores its frame and the other loses
+    val barrier = new CyclicBarrier(2)
+    val pool = Executors.newFixedThreadPool(2)
+    val frames = try {
+      val calls = (1 to 2).map(_ => pool.submit(() =>
+        SessionArtifacts.getOrBuild(spark, s"md5-shingle-index:$dir") { cold =>
+          val built = Dedup.md5ShingleBuild(spark, dir)(cold)
+          barrier.await(60, TimeUnit.SECONDS)
+          built
+        }))
+      calls.map(_.get(120, TimeUnit.SECONDS))
+    } finally pool.shutdown()
+    assert(frames(0) eq frames(1), "both calls must return the winner's frame")
+    assert(Dedup.md5ShingleIndex(spark, dir) eq frames(0),
+      "the raced key must be the one md5ShingleIndex reads")
+    assert(frames(0).storageLevel ==
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
+      "the race loser's release dropped the winner's cache")
+    val plan = Dedup.dedupMinhash(spark, dir).queryExecution.executedPlan.toString
+    assert(plan.contains("InMemoryTableScan"),
+      s"dedup_minhash no longer reads the md5-shingle cache:\n${plan.take(2000)}")
+  }
+
+  test("a cold md5-shingle build does not read the warm index's cache") {
+    val dir = privateCorpus()
+    val warm = Dedup.dedupMinhash(spark, dir)
+    assert(warm.queryExecution.executedPlan.toString.contains("InMemoryTableScan"))
+    val warmRows = minhashRows(warm)
+    sys.props("graft.cold") = "1"
+    try {
+      val cold = Dedup.dedupMinhash(spark, dir)
+      val plan = cold.queryExecution.executedPlan.toString
+      assert(!plan.contains("InMemoryTableScan"),
+        s"a cold dedup_minhash read the warm cache:\n${plan.take(2000)}")
+      assert(minhashRows(cold) == warmRows, "cold rows diverged from the warm index")
+    } finally sys.props.remove("graft.cold")
+  }
+
   test("componentLabels frees every block set on the non-convergence error path") {
     val ss = TestSpark.spark
     import ss.implicits._

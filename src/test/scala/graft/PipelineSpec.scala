@@ -43,9 +43,11 @@ class PipelineSpec extends SparkSpec {
     assert(counts("train") == 12 && counts("test") == 3)
   }
 
-  test("the paper pass runs no job before its two actions, each scanning the file once") {
+  test("the paper pass runs no job before its two actions, and scans the file once") {
     // the perfbench turbofan operation on the fixture: a new eager job or
-    // a second scan of the input anywhere in it fails here
+    // a second scan of the input anywhere in it fails here. The tensor
+    // frame is planned once, so the evaluation reads the fit's shuffle
+    // output and no input bytes
     val file = TurbofanFixture.writeTrain()
     val settings = (1 to 3).map(i => s"setting_$i")
     val features = settings ++ (1 to 21).map(i => s"sensor_$i")
@@ -72,7 +74,7 @@ class PipelineSpec extends SparkSpec {
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     }
     assert(counts == Map("train" -> 12L, "test" -> 3L))
-    assert(eval.nonEmpty && eval.map(_.inputBytes).sum == bytes,
+    assert(eval.nonEmpty && eval.map(_.inputBytes).sum == 0L,
       s"predict + MSE read ${eval.map(_.inputBytes)} bytes of a $bytes-byte file")
   }
 
