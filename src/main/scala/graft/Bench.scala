@@ -17,34 +17,6 @@ object Bench {
   def evaluate(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  /** Median-of-3 wall time for the forensics side-lines (minhash premium,
-    * lib additions, asof_native) — one timing protocol for all of them. */
-  private def med(f: () => Unit): Double = {
-    val ts = (1 to 3).map { _ =>
-      val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e9
-    }.sorted
-    ts(1)
-  }
-
-  /** med(), unless rep1 alone blows `budgetSecs` — then report rep1 and
-    * say so in the returned label. For side-lines that are batch jobs at
-    * big SF (the sf10 fuzzy join runs ~17 min/rep): the r12 probe paid
-    * 3 × 1042 s to land the canonical med-of-3 artifact; re-paying 51
-    * minutes every leg for a number already on the record is not
-    * measurement, it's ritual. Small-SF legs still get the full
-    * median protocol (rep1 under budget → two more reps as usual). */
-  private def medOrRep1(f: () => Unit, budgetSecs: Double): (Double, String) = {
-    val t0 = System.nanoTime(); f()
-    val r1 = (System.nanoTime() - t0) / 1e9
-    if (r1 > budgetSecs) (r1, f"rep1, over ${budgetSecs}%.0f s budget")
-    else {
-      val ts = (Seq(r1) ++ (1 to 2).map { _ =>
-        val t = System.nanoTime(); f(); (System.nanoTime() - t) / 1e9
-      }).sorted
-      (ts(1), "med of 3")
-    }
-  }
-
   /** The family prefixes the contingency alias rungs strip from query
     * keys. Mirrored by tools/scaling_report.py's key normalizer — change
     * one, change both. Longest-match order matters only where one prefix
@@ -263,8 +235,7 @@ object Bench {
     // per-rep GC evidence for exactly one query, so the record, not the
     // instrument, was the gap
     val tee = new Forensics.Tee(Some(Forensics.benchFile()))
-    val taskTimes = new Forensics.TaskTimeListener
-    spark.sparkContext.addSparkListener(taskTimes)
+    val taskTimes = new Forensics.LayerListener().attach(spark)
     tee.log(s"[bench] start ${java.time.Instant.now()} sf=$sfDir cpus=$cpus " +
       s"cold=${SessionArtifacts.cold} " +
       s"reps_env=${sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "")}")
@@ -282,17 +253,6 @@ object Bench {
     // side-file fixtures (external RUL labels) are generated here, once,
     // so ts_rul_validation's timed reps are purely the read+join
     Fixtures.ensureRulLabels(spark, sfDir)
-    // cumulative stop-the-world collection time across all collectors —
-    // the per-rep delta separates "the query was slow" from "a GC pause
-    // landed inside the rep", which medians alone cannot distinguish
-    // (the r6 forensic gap: three unexplained driver spikes)
-    def gcMillis(): Long = {
-      val it = java.lang.management.ManagementFactory
-        .getGarbageCollectorMXBeans.iterator()
-      var t = 0L
-      while (it.hasNext) t += math.max(0L, it.next().getCollectionTime)
-      t
-    }
     val cold = SessionArtifacts.cold
     // The session artifacts (cluster index, md5-shingle index, gate
     // models, curation recipe and increment states) are built once and
@@ -337,7 +297,7 @@ object Bench {
     val countwall = sys.env.get("SPARK_GRAFT_COUNTWALL").contains("1")
     var failed = List.empty[String]
     // per-query (gap-health sample, rep walls) kept for the wave re-run
-    // pass below — the r16 manual ProfileQuery A/B round-trip, automated
+    // pass below — the r16 manual per-query re-measurement, automated
     val traces = scala.collection.mutable.Map.empty[String, (Double, Seq[Double])]
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       // drain pending collections in the UNTIMED gap: the ContextCleaner
@@ -360,7 +320,7 @@ object Bench {
       val repStats = (1 to reps).map { rep =>
         Forensics.drainListenerBus(spark, taskTimes)
         val task0 = taskTimes.snapshot()
-        val gc0 = gcMillis()
+        val gc0 = Forensics.gcMillis()
         val t0 = System.nanoTime()
         val ok =
           try { evaluate(fn(spark, sfDir)); true }
@@ -369,7 +329,7 @@ object Bench {
           }
         // wall stops HERE — the bus drain below is bookkeeping, not query
         val dt = (System.nanoTime() - t0) / 1e9
-        val gcd = gcMillis() - gc0
+        val gcd = Forensics.gcMillis() - gc0
         Forensics.drainListenerBus(spark, taskTimes)
         val task = taskTimes.snapshot() - task0
         // per-rep forensics: wall + driver-GC landed inside the rep +
@@ -419,7 +379,7 @@ object Bench {
     }.toMap
     // wave re-run automation (r16 verdict #3): the throttle waves this
     // host class suffers (tens-of-seconds windows, 6-10x task-CPU, 1-2
-    // per leg) previously cost a manual ProfileQuery round-trip per
+    // per leg) previously cost a manual re-measurement round-trip per
     // flagged block (r15 dedup block, r16 curation_recipe). Now: any
     // query whose untimed gap sample reads under a fifth of the leg's
     // median page-supply rate, or whose reps spread past 4x with >1 s of
@@ -487,359 +447,6 @@ object Bench {
       }
     } catch { case scala.util.control.NonFatal(e) =>
       tee.log(s"[bench] wave_rerun pass FAILED: $e")
-    }
-    // forensics-only (r9 verdict #4): the gated dedup_minhash surface pays
-    // an md5 premium — the md5 hash family exists solely so DuckDB can
-    // replay every hash; the LIB DEFAULT stays xxhash64 (~2-3× cheaper per
-    // shingle). Record both pair-generation paths side by side each run so
-    // the oracle-replay premium can never be mistaken for engine cost.
-    try {
-      val docs = graft.Tables.documents(spark, sfDir)
-      val prod = med(() => evaluate(
-        graft.operators.Dedup.minhashPairs(docs, "text")))
-      val md5 = med(() => evaluate(
-        graft.operators.Dedup.minhashPairsMd5(docs, "text")))
-      tee.log(f"[bench] minhash_premium production_xxhash64=$prod%.3f s " +
-        f"gated_md5=$md5%.3f s premium=${md5 - prod}%.3f s (med of 3; " +
-        "oracle-replayability cost, not engine cost)")
-    } catch { case scala.util.control.NonFatal(e) =>
-      tee.log(s"[bench] minhash_premium FAILED: $e")
-    }
-    // forensics-only (r15): same oracle-replay-premium split for the
-    // exact keep-first window — the r14 verdict's worst sf10 ratio
-    // (29×, CPU-bound) — md5-of-full-text (gated flavor) vs the
-    // codegen'd xxhash64 production twin over the SAME window exchange,
-    // so the delta isolates the hash cost from the exchange cost.
-    try {
-      val docs = graft.Tables.documents(spark, sfDir)
-      val prod = med(() => evaluate(
-        graft.operators.Dedup.exactKeepFirstHashed(docs, "text")))
-      val md5T = med(() => evaluate(
-        graft.operators.Dedup.exactKeepFirst(docs, "text")))
-      tee.log(f"[bench] exact_keepfirst_premium production_xxhash64=$prod%.3f s " +
-        f"gated_md5=$md5T%.3f s premium=${md5T - prod}%.3f s (med of 3; " +
-        "oracle-replayability cost, not engine cost)")
-    } catch { case scala.util.control.NonFatal(e) =>
-      tee.log(s"[bench] exact_keepfirst_premium FAILED: $e")
-    }
-    // forensics-only (r10): measured numbers for the lib-level additions
-    // that have no gated slot — the one-pass profiler over the events
-    // table, the theta distinct sketch, and the KLL-rank per-row
-    // percentile scoring pass — so the claims in SURVEY carry wall times
-    // at bench scale, not just spec assertions at sf0.001.
-    try {
-      val ev = graft.Tables.events(spark, sfDir)
-      val profT = med(() => evaluate(graft.operators.Profile.profile(ev)))
-      val thetaT = med(() => {
-        ev.agg(graft.functions.Theta.sketch(
-          org.apache.spark.sql.functions.col("user_id"), 4096)).head
-        ()
-      })
-      val pctT = med(() => evaluate(
-        graft.operators.Profile.percentileScore(ev, "value")))
-      tee.log(f"[bench] lib_additions profile=$profT%.3f s " +
-        f"theta_sketch_k4096=$thetaT%.3f s percentile_score=$pctT%.3f s " +
-        "(med of 3, events table)")
-    } catch { case scala.util.control.NonFatal(e) =>
-      tee.log(s"[bench] lib_additions FAILED: $e")
-    }
-    // forensics-only (r10, second wave): the post-probe additions —
-    // interval-overlap join (per-user-hour activity spans × the 200
-    // maintenance windows), the file-stats manifest build over the
-    // events parquet directory (the real per-file aggregation a 100 TB
-    // manifest pays at ingest), and the k=64 mergeable reservoir sample.
-    try {
-      import org.apache.spark.sql.functions.{col, floor => ffloor, max => fmax, min => fmin, unix_micros}
-      val ev = graft.Tables.events(spark, sfDir)
-      val spans = ev.withColumn("us", unix_micros(col("ts")))
-        .groupBy(col("user_id"), ffloor(col("us") / 3600000000L).as("hr"))
-        .agg(fmin(col("us")).as("u_s"), fmax(col("us")).as("u_e"))
-      val iv = graft.operators.RangeJoin.intervals(spark)
-        .withColumnRenamed("start_us", "m_s").withColumnRenamed("end_us", "m_e")
-      val ivT = med(() => evaluate(graft.operators.RangeJoin.intervalJoin(
-        spans, "u_s", "u_e", iv, "m_s", "m_e", bucketUs = 24L * 3600000000L)))
-      val manT = med(() => evaluate(graft.sources.Manifest.build(
-        spark, s"$sfDir/events.parquet", Seq("user_id", "value"))))
-      val resT = med(() => {
-        ev.agg(graft.functions.Reservoir.sample(col("user_id"), 64)).head
-        ()
-      })
-      tee.log(f"[bench] lib_additions2 interval_join=$ivT%.3f s " +
-        f"manifest_build=$manT%.3f s reservoir_k64=$resT%.3f s " +
-        "(med of 3, events table)")
-    } catch { case scala.util.control.NonFatal(e) =>
-      tee.log(s"[bench] lib_additions2 FAILED: $e")
-    }
-    // forensics-only (r10, third wave): substring-span dedup over the
-    // documents table — the two gram-keyed exchanges (O(tokens) ~20-byte
-    // rows each) make it the heaviest lib addition, so its wall time
-    // belongs on the record next to the dedup family it extends.
-    try {
-      import org.apache.spark.sql.functions.col
-      val docs = graft.Tables.documents(spark, sfDir)
-        .select(col("doc_id"), col("text"), col("lang"))
-      val spanT = med(() => evaluate(
-        graft.operators.Dedup.duplicatedSpans(docs, "doc_id", "text", n = 20)))
-      val nbT = med(() => {
-        val m = graft.ml.NaiveBayes.fit(docs, "text", "lang", vocabSize = 2048)
-        evaluate(graft.ml.NaiveBayes.predict(docs, "doc_id", "text", m))
-      })
-      tee.log(f"[bench] lib_additions3 substring_spans=$spanT%.3f s " +
-        f"nb_fit_predict=$nbT%.3f s (med of 3, documents table, n=20)")
-    } catch { case scala.util.control.NonFatal(e) =>
-      tee.log(s"[bench] lib_additions3 FAILED: $e")
-    }
-    // forensics-only (r11, fourth wave): the round's curation additions —
-    // Stupid Backoff LM fit + full-corpus scoring over documents (the
-    // perplexity-filter path), the Levenshtein fuzzy self-join over
-    // customer names (a worst-case-friendly domain: every name shares the
-    // "Customer#" prefix, so only the prefix-filter's rare-gram blocking
-    // keeps candidates near the ~260k true pairs; part names are
-    // DEGENERATE here — 64 distinct values ×300 copies make the true
-    // answer itself ~4M pairs), PCA fit + projection over the embeddings
-    // table, and the deflate compression-ratio scan.
-    try {
-      import org.apache.spark.sql.functions.col
-      val docs = graft.Tables.documents(spark, sfDir)
-      val lmT = med(() => {
-        val m = graft.ml.NgramLm.fit(docs, "text", maxUnigrams = 4096,
-          maxBigrams = 8192, maxTrigrams = 8192)
-        evaluate(graft.ml.NgramLm.score(docs, "doc_id", "text", m))
-      })
-      // the fuzzy input derives the name from the DISTINCT key, not from
-      // c_name: GenScale replicates c_name verbatim (100 copies per name
-      // at sf10), which inflates the TRUE pair count quadratically — a
-      // generator artifact that measures nothing (the r10 GenScale
-      // lesson). The key-derived domain grows linearly with scale.
-      val cust = graft.Tables.customerKernel(spark, sfDir)
-        .select(col("c_custkey").as("id"),
-          org.apache.spark.sql.functions.format_string(
-            "Customer#%09d", col("c_custkey")).as("s"))
-      // SPARK_GRAFT_FUZZY_BUDGET raises the rep1 budget when a leg
-      // deliberately pays for the canonical med-of-3 protocol (r13
-      // verdict: a matching protocol beats a labeled mismatch) — the
-      // default keeps the ~3-17 min/rep sf10 join from tripling every
-      // routine leg
-      val fuzzyBudget = sys.env.get("SPARK_GRAFT_FUZZY_BUDGET")
-        .flatMap(s => scala.util.Try(s.trim.toDouble).toOption)
-        .getOrElse(120.0)
-      // RETIRED from every-leg execution (r18 verdict #4, decided r19):
-      // the five-round fuzzy_pairs_cname question is CLOSED — q = 3
-      // adopted for this domain by measurement (829.0 s q=2 r17 leg ->
-      // 171.8 s q=3 r18 committed leg at the 1.5M-name sf10 domain,
-      // pair parity spec-pinned for q in {2,3}), and re-paying ~172 s
-      // per sf10 leg measures nothing new. The side-line now runs only
-      // when SPARK_GRAFT_FUZZY_SENTINEL is set (the every-N-rounds
-      // sentinel / on-demand mode; ProfileFuzzy remains the deep-dive
-      // tool); the skip is printed so the leg's record states the
-      // decision rather than silently omitting the line.
-      val fuzzySentinel = sys.env.contains("SPARK_GRAFT_FUZZY_SENTINEL")
-      val (fzT, fzProto) =
-        if (fuzzySentinel)
-          medOrRep1(() => evaluate(
-            graft.operators.FuzzyJoin.fuzzyPairs(cust, "id", "s",
-              maxDist = 1, q = 3)),
-            budgetSecs = fuzzyBudget)
-        else (-1.0, "RETIRED r19 (q=3 adopted r18; " +
-          "set SPARK_GRAFT_FUZZY_SENTINEL to re-measure)")
-      val emb = graft.Tables.embeddings(spark, sfDir)
-      val pcaT = med(() => {
-        val m = graft.ml.Pca.fit(emb, "embedding", k = 8)
-        evaluate(graft.ml.Pca.project(emb, "embedding", m))
-      })
-      val crT = med(() => evaluate(
-        graft.operators.TextOps.compressionRatio(docs)))
-      val bpeT = med(() => {
-        val (bm, _) = graft.ml.Bpe.fit(docs, "text", numMerges = 200)
-        evaluate(graft.ml.Bpe.tokenCount(docs, "text", bm))
-      })
-      val fzLine = if (fzT >= 0) f"fuzzy_pairs_cname=$fzT%.3f s (q=3) "
-                   else "fuzzy_pairs_cname=SKIPPED "
-      tee.log(f"[bench] lib_additions4 ngram_lm_fit_score=$lmT%.3f s " +
-        fzLine +
-        f"pca_fit_project=$pcaT%.3f s " +
-        f"compress_ratio=$crT%.3f s bpe_fit200_count=$bpeT%.3f s " +
-        s"(med of 3; fuzzy: $fzProto)")
-    } catch { case scala.util.control.NonFatal(e) =>
-      tee.log(s"[bench] lib_additions4 FAILED: $e")
-    }
-    // forensics-only (r12, fifth wave): the map-side LM scorer vs the
-    // broadcast-join form (same rows bit-for-bit, two plan shapes), the
-    // pairwise span-attribution join, the PCA reconstruction-error and
-    // whitened-projection kernels, and BPE at realistic merge scale. The
-    // corpus fit EXHAUSTS its pair diversity early (tiny synthetic
-    // vocabulary — the learned count on the line says so honestly), so
-    // the driver-loop complexity claim is exercised on a seeded 64k-type
-    // Zipf word table fed straight to learnMerges: rep1, driver-only
-    // seconds, no Spark in the measured region.
-    try {
-      import org.apache.spark.sql.functions.col
-      val docs = graft.Tables.documents(spark, sfDir)
-      val lm12 = graft.ml.NgramLm.fit(docs, "text", maxUnigrams = 4096,
-        maxBigrams = 8192, maxTrigrams = 8192)
-      val lmJoinT = med(() => evaluate(
-        graft.ml.NgramLm.score(docs, "doc_id", "text", lm12)))
-      val lmMapT = med(() => evaluate(
-        graft.ml.NgramLm.scoreMapSide(docs, "text", lm12)))
-      val spanT = med(() => evaluate(graft.operators.Dedup.sharedSpanPairs(
-        docs, "doc_id", "text", n = 15, maxDf = 50)))
-      val emb = graft.Tables.embeddings(spark, sfDir)
-      val pca12 = graft.ml.Pca.fit(emb, "embedding", k = 8)
-      val recT = med(() => evaluate(
-        graft.ml.Pca.reconstructionError(emb, "embedding", pca12)))
-      val whiteT = med(() => evaluate(
-        graft.ml.Pca.projectWhitened(emb, "embedding", pca12)))
-      tee.log(f"[bench] lib_additions5 lm_score_join=$lmJoinT%.3f s " +
-        f"lm_score_mapside=$lmMapT%.3f s shared_span_pairs=$spanT%.3f s " +
-        f"pca_rec_err=$recT%.3f s pca_whitened=$whiteT%.3f s (med of 3)")
-      val t32a = System.nanoTime()
-      val (bm32, _) = graft.ml.Bpe.fit(docs, "text", numMerges = 32768)
-      val fit32 = (System.nanoTime() - t32a) / 1e9
-      val rnd = new scala.util.Random(7L)
-      val wc = Array.tabulate(1 << 16) { i =>
-        val len = 3 + rnd.nextInt(12)
-        val w = (0 until len).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
-        (w, math.max(1L, (100000.0 / (i + 1)).toLong))
-      }.groupBy(_._1).map { case (w, g) => (w, g.map(_._2).sum) }.toArray
-      val t32b = System.nanoTime()
-      val loop32 = graft.ml.Bpe.learnMerges(wc, numMerges = 32768)
-      val drv32 = (System.nanoTime() - t32b) / 1e9
-      tee.log(f"[bench] bpe_fit32k corpus_fit=$fit32%.3f s " +
-        f"corpus_learned=${bm32.merges.length} " +
-        f"driver_loop_64k_types=$drv32%.3f s " +
-        f"driver_learned=${loop32.length} (rep1)")
-    } catch { case scala.util.control.NonFatal(e) =>
-      tee.log(s"[bench] lib_additions5 FAILED: $e")
-    }
-    // forensics-only (r10): the native as-of operator (plans.AsofJoin,
-    // declared-requirements merge) against the oracle-gated union+window
-    // formulation it shadows — same inputs, same result (AsofPlanSpec
-    // pins equality), two plans. The gated ts_asof_join slot stays on the
-    // composed path (its DuckDB oracle mirrors that construction); this
-    // line keeps the native operator's claimed advantage measured.
-    try {
-      import org.apache.spark.sql.functions.{col, unix_micros}
-      val d = graft.Tables.events(spark, sfDir)
-        .withColumn("ts_us", unix_micros(col("ts")))
-        .select("user_id", "ts_us", "event_id", "event_type", "value")
-      val p = d.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts_us"), col("event_id"),
-          col("value").as("pv"))
-      val composed = med(() => evaluate(
-        graft.operators.TimeSeriesOps.asofJoin(d, p, "user_id", "ts_us",
-          "pv", tieCols = Seq("event_id"))))
-      val native = med(() => evaluate(
-        graft.plans.AsofJoin(d, p, "user_id", "ts_us", "pv",
-          rightTieCols = Seq("event_id"))))
-      tee.log(f"[bench] asof_native union_window=$composed%.3f s " +
-        f"native_merge=$native%.3f s (med of 3, events-join-purchases)")
-    } catch { case scala.util.control.NonFatal(e) =>
-      tee.log(s"[bench] asof_native FAILED: $e")
-    }
-    // forensics-only (r13, sixth wave): the sampled mega-df span
-    // attribution next to the base operator's line (same n/maxDf, so the
-    // delta IS the sampling path's cost), and the end-to-end curation
-    // recipe (exact -> near -> substring-cut -> composed gate) with the
-    // models prefit outside the timer — they are inputs, not work. The
-    // recipe is a batch job at big SF (it contains the LSH label
-    // fixpoint), so it gets the medOrRep1 budget protocol; the handle is
-    // closed per rep so the persisted stages never accumulate across
-    // reps.
-    try {
-      import org.apache.spark.sql.functions.col
-      val docs = graft.Tables.documents(spark, sfDir)
-        .select(col("doc_id"), col("text"))
-      val sampT = med(() => evaluate(
-        graft.operators.Dedup.sharedSpanPairsSampled(
-          docs, "doc_id", "text", n = 15, maxDf = 50, sampleDocs = 8)))
-      val lm13 = graft.ml.NgramLm.fit(docs, "text", maxUnigrams = 4096,
-        maxBigrams = 8192, maxTrigrams = 8192)
-      val (bpe13, _) = graft.ml.Bpe.fit(docs, "text", numMerges = 50)
-      val (curT, curProto) = medOrRep1(() => {
-        val (cur, h) = graft.operators.Curation.curateCorpus(
-          docs, "doc_id", "text", lm13, maxPpl = 1e6, bpe13,
-          nearThreshold = 0.8, spanN = 15, minKeptRatio = 0.1)
-        try evaluate(cur) finally h.close()
-      }, budgetSecs = 600)
-      // daily-increment form: every 10th doc plays the arriving batch,
-      // the rest the existing corpus; yesterday's index (the old-corpus
-      // fixpoint) is an INPUT, prefit outside the timer like the models
-      val batch13 = docs.filter(col("doc_id") % 10 === 0)
-      val old13 = docs.filter(col("doc_id") % 10 =!= 0)
-      val lvl13 = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val oldLabels13 = graft.operators.Dedup
-        .dedupClusters(old13, threshold = 0.8)
-        .select(col("doc_id"), col("cluster_id")).persist(lvl13)
-      oldLabels13.count()
-      // yesterday's gram index is an input too — prefit like the labels
-      val gramIx13 = graft.operators.Dedup.gramIndex(old13, "text", n = 15)
-        .persist(lvl13)
-      gramIx13.count()
-      val incT = med(() => {
-        val (inc, h) = graft.operators.Curation.curateIncrement(
-          batch13, "doc_id", "text", old13, oldLabels13, lm13,
-          maxPpl = 1e6, bpe13, nearThreshold = 0.8, md5Family = true,
-          spanIndex = Some(gramIx13), spanN = 15, minKeptRatio = 0.1)
-        try evaluate(inc) finally h.close()
-      })
-      oldLabels13.unpersist(blocking = false)
-      gramIx13.unpersist(blocking = false)
-      tee.log(f"[bench] lib_additions6 span_pairs_sampled=$sampT%.3f s " +
-        f"curate_corpus=$curT%.3f s curate_increment=$incT%.3f s " +
-        s"(med of 3; curate: $curProto)")
-    } catch { case scala.util.control.NonFatal(e) =>
-      tee.log(s"[bench] lib_additions6 FAILED: $e")
-    }
-    // seventh-wave lib additions (r16): the daily-verdict STORAGE pair at
-    // bench scale — sources.IncrementStore writes day 1 (clustered +
-    // manifest in one consistent pair), appends day 2 (manifest brought
-    // forward scanning only the new files), then the day-2 pruned read is
-    // priced against the full-scan filter it row-equals. Writes are
-    // once-per-leg by nature (an append is not idempotent — med-of-3
-    // would write three days), reads get the usual median protocol.
-    try {
-      import org.apache.spark.sql.functions.{col, lit, max, when, percentile_approx}
-      val dir = java.nio.file.Files.createTempDirectory("bench_store").toString
-      val store = graft.sources.IncrementStore(
-        s"$dir/verdicts", s"$dir/manifest", filesPerIncrement = 8)
-      val vdocs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("text"),
-          col("doc_id").as("cluster_id"),
-          when(col("doc_id") % 10 === 0, "high_perplexity")
-            .otherwise(lit(null)).cast("string").as("curation_reject"))
-      val mid = vdocs.agg(
-        percentile_approx(col("doc_id"), lit(0.5), lit(100)))
-        .head.getLong(0)
-      val hi = vdocs.agg(max(col("doc_id"))).head.getLong(0)
-      def t(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      val w1 = t(store.writeIncrement(vdocs.filter(col("doc_id") < mid)))
-      val w2 = t(store.writeIncrement(vdocs.filter(col("doc_id") >= mid)))
-      val nFiles = store.manifest(spark).count()
-      val surv = graft.sources.Manifest.prune(store.manifest(spark),
-        Map("doc_id" -> (mid: Any, hi: Any))).length
-      val rp = med(() => evaluate(
-        store.readRange(spark, Map("doc_id" -> (mid: Any, hi: Any)))))
-      val rf = med(() => evaluate(
-        spark.read.parquet(s"$dir/verdicts")
-          .filter(col("doc_id") >= mid && col("doc_id") <= hi)))
-      // r17: price the two store maintenance jobs on the same table —
-      // a ~0.1% band erasure (dirty-proportional rewrite + manifest
-      // forward) and the full compaction (O(table) by design). Both are
-      // state-changing, so rep1 like the writes.
-      val delKeys = (0 until 64).map(i => (mid + i): Any)
-      var delStats: graft.sources.Layout.DeleteStats = null
-      val dT = t { delStats = store.deleteRows(spark, "doc_id", delKeys) }
-      val cT = t { store.compact(spark, targetFileBytes = 256L << 20) }
-      tee.log(f"[bench] lib_additions7 store_day1_write=$w1%.3f s " +
-        f"store_day2_append=$w2%.3f s read_pruned=$rp%.3f s " +
-        f"read_full=$rf%.3f s files=$surv/$nFiles " +
-        f"delete=$dT%.3f s (${delStats.rowsDeleted} rows, " +
-        f"${delStats.filesRewritten}/${delStats.filesTotal} files) " +
-        f"compact=$cT%.3f s (writes/maintenance rep1, reads med of 3)")
-    } catch { case scala.util.control.NonFatal(e) =>
-      tee.log(s"[bench] lib_additions7 FAILED: $e")
     }
     val sfName = new java.io.File(sfDir).getName
     val out = formatLine(results, failed, sfName,

@@ -1,9 +1,11 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Durable per-round forensics for the bench/verify mains.
   *
@@ -91,45 +93,101 @@ object Forensics {
     def close(): Unit = out.foreach(_.close())
   }
 
-  /** Executor-side task-time accumulator. Task metrics are recorded by the
-    * executor threads and are therefore IMMUNE to driver-side pauses: a
-    * query whose wall time spikes while its task time stays flat was
-    * stalled by the driver box (GC pause, CPU contention, scheduler
-    * starvation), not by more cluster work — the distinction the r6/r7
-    * spike post-mortems could not make from medians alone.
-    *
+  /** One listener for every per-query layer counter, registered on the
+    * SparkContext (jobs, stages, task metrics) and on the session's
+    * listener manager (planning phases from each finished
+    * `QueryExecution.tracker`). Task metrics are recorded by the executor
+    * threads and are therefore IMMUNE to driver-side pauses: a query
+    * whose wall time spikes while its task time stays flat was stalled by
+    * the driver box (GC pause, CPU contention, scheduler starvation), not
+    * by more cluster work — the distinction the r6/r7 spike post-mortems
+    * could not make from medians alone. Counters only grow; a layer's
+    * share of a region is the difference of two [[snapshot]]s taken
+    * around it, each after [[drainListenerBus]]. See [[Snap]] for the
+    * fields. */
+  final class LayerListener extends SparkListener with QueryExecutionListener {
+    private var total = Snap()
+    private def add(d: Snap): Unit = synchronized { total = total + d }
+    def snapshot(): Snap = synchronized(total)
+
+    def attach(spark: SparkSession): this.type = {
+      spark.sparkContext.addSparkListener(this)
+      spark.listenerManager.register(this)
+      this
+    }
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = add(Snap(jobs = 1))
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      add(Snap(stages = 1))
+    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
+      val m = te.taskMetrics
+      val i = te.taskInfo
+      if (m != null && i != null)
+        add(Snap(runMs = m.executorRunTime, gcMs = m.jvmGCTime,
+          schedMs = math.max(0L, i.duration - m.executorRunTime -
+            m.executorDeserializeTime - m.resultSerializationTime),
+          nTasks = 1, cpuNs = m.executorCpuTime,
+          inputBytes = m.inputMetrics.bytesRead,
+          shuffleWriteBytes = m.shuffleWriteMetrics.bytesWritten,
+          shuffleReadBytes = m.shuffleReadMetrics.totalBytesRead,
+          spillBytes = m.diskBytesSpilled))
+    }
+
+    private def planned(qe: QueryExecution): Unit = {
+      val ph = qe.tracker.phases
+      def ms(k: String): Long = ph.get(k).map(_.durationMs).getOrElse(0L)
+      add(Snap(analysisMs = ms(QueryPlanningTracker.ANALYSIS),
+        optimizationMs = ms(QueryPlanningTracker.OPTIMIZATION),
+        planningMs = ms(QueryPlanningTracker.PLANNING)))
+    }
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      planned(qe)
+    override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+      planned(qe)
+  }
+
+  /** Cumulative layer counters.
     *  - `runMs`    Σ executorRunTime — the work the cluster actually did
     *  - `gcMs`     Σ jvmGCTime inside tasks
     *  - `schedMs`  Σ max(0, duration − run − deserialize − resultSer) —
     *               scheduler delay + queueing, the driver-congestion smell
     *  - `nTasks`   task count (plan-shape drift tripwire)
-    */
-  final class TaskTimeListener extends SparkListener {
-    val runMs = new AtomicLong(0)
-    val gcMs = new AtomicLong(0)
-    val schedMs = new AtomicLong(0)
-    val nTasks = new AtomicLong(0)
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      val i = te.taskInfo
-      if (m != null) {
-        runMs.addAndGet(m.executorRunTime)
-        gcMs.addAndGet(m.jvmGCTime)
-        if (i != null) {
-          schedMs.addAndGet(math.max(0L, i.duration - m.executorRunTime -
-            m.executorDeserializeTime - m.resultSerializationTime))
-          nTasks.incrementAndGet()
-        }
-      }
-    }
-    def snapshot(): Snap = Snap(runMs.get, gcMs.get, schedMs.get, nTasks.get)
-  }
-
-  final case class Snap(runMs: Long, gcMs: Long, schedMs: Long, nTasks: Long) {
-    def -(o: Snap): Snap =
-      Snap(runMs - o.runMs, gcMs - o.gcMs, schedMs - o.schedMs, nTasks - o.nTasks)
+    *  - `cpuNs`, `inputBytes`, `shuffleWriteBytes`, `shuffleReadBytes`,
+    *    `spillBytes` (to disk) — the rest of the task metrics
+    *  - `jobs`, `stages` — submitted, skipped stages not counted
+    *  - `analysisMs`, `optimizationMs`, `planningMs` — driver planning
+    *    phases of every finished query execution
+    * `toString` prints only the first four: Bench's per-rep lines carry
+    * them in the form tools/scaling_report.py parses. */
+  final case class Snap(runMs: Long = 0, gcMs: Long = 0, schedMs: Long = 0,
+                        nTasks: Long = 0, cpuNs: Long = 0, inputBytes: Long = 0,
+                        shuffleWriteBytes: Long = 0, shuffleReadBytes: Long = 0,
+                        spillBytes: Long = 0, jobs: Long = 0, stages: Long = 0,
+                        analysisMs: Long = 0, optimizationMs: Long = 0,
+                        planningMs: Long = 0) {
+    private def zip(o: Snap)(f: (Long, Long) => Long): Snap =
+      Snap(f(runMs, o.runMs), f(gcMs, o.gcMs), f(schedMs, o.schedMs),
+        f(nTasks, o.nTasks), f(cpuNs, o.cpuNs), f(inputBytes, o.inputBytes),
+        f(shuffleWriteBytes, o.shuffleWriteBytes),
+        f(shuffleReadBytes, o.shuffleReadBytes), f(spillBytes, o.spillBytes),
+        f(jobs, o.jobs), f(stages, o.stages), f(analysisMs, o.analysisMs),
+        f(optimizationMs, o.optimizationMs), f(planningMs, o.planningMs))
+    def +(o: Snap): Snap = zip(o)(_ + _)
+    def -(o: Snap): Snap = zip(o)(_ - _)
     override def toString: String =
       s"task=${runMs}ms taskGc=${gcMs}ms sched=${schedMs}ms ntasks=$nTasks"
+  }
+
+  /** Cumulative stop-the-world collection time of the driver JVM across
+    * all collectors: a per-rep delta separates "the query was slow" from
+    * "a GC pause landed inside the rep", which medians alone cannot
+    * distinguish (the r6 forensic gap: three unexplained driver spikes). */
+  def gcMillis(): Long = {
+    val it = java.lang.management.ManagementFactory
+      .getGarbageCollectorMXBeans.iterator()
+    var t = 0L
+    while (it.hasNext) t += math.max(0L, it.next().getCollectionTime)
+    t
   }
 
   /** Flush the async listener bus so a snapshot taken right after an
@@ -139,7 +197,7 @@ object Forensics {
     * handle). Falls back to a bounded settle-poll if the reflective path
     * ever breaks on a Spark upgrade: forensic precision degrades, the
     * bench never fails. */
-  def drainListenerBus(spark: SparkSession, l: TaskTimeListener): Unit =
+  def drainListenerBus(spark: SparkSession, l: LayerListener): Unit =
     try {
       val sc = spark.sparkContext
       val bus = sc.getClass.getMethod("listenerBus").invoke(sc)

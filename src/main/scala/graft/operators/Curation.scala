@@ -264,9 +264,10 @@ object Curation {
     * [[TextOps.gateModels]]: built once per (app, sfDir) — one bounded
     * checkpoint + the FOUR pinned stage frames (base, exact-survivors,
     * cut, gated) live for the session, and every rep re-evaluates the
-    * (lazy) verdict frame against them. The uncached per-call cost also
-    * stays on lib_additions6's `curate_corpus` forensics line, where the
-    * handle IS closed per rep. A cold build persists its stages instead
+    * (lazy) verdict frame against them. The uncached per-call cost, with
+    * the handle closed per rep, is on the record as the `curate_corpus`
+    * figure of the bench forensics from r13 on (e.g.
+    * BENCH_FORENSICS_r13_scaleprobe_sf01.txt). A cold build persists its stages instead
     * of pinning them, and the next cold build closes its handle: the
     * previous cold frame, if still referenced, merely recomputes (the
     * handle contract's documented degradation), and the label

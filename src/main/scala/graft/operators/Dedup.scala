@@ -37,11 +37,12 @@ object Dedup {
   }
 
   /** Production twin of [[exactKeepFirst]]: the same keep-first window
-    * keyed on `xxhash64(text)` instead of md5 (r15, the minhash_premium
-    * pattern — the r14 verdict flagged dedup_exact_keep_first as the
-    * board's worst sf10 ratio, 29×, and asked whether the premium is the
-    * hash or the exchange; the bench's `exact_keepfirst_premium` line
-    * prices both flavors side by side every leg). The md5 flavor exists
+    * keyed on `xxhash64(text)` instead of md5 (r15, the same split as
+    * minhash's md5 and xxhash64 pair generators — the r14 verdict flagged
+    * dedup_exact_keep_first as the board's worst sf10 ratio, 29×, and
+    * asked whether the cost is the hash or the exchange; the bench
+    * forensics from r15 on price both flavors side by side, e.g.
+    * BENCH_FORENSICS_r15_scaleprobe_sf10.txt). The md5 flavor exists
     * solely so DuckDB can replay the hash in the oracle; xxhash64 is the
     * codegen'd 64-bit house hash — same dedup semantics modulo a ~2⁻⁶⁴
     * per-pair collision odds (a collision would conflate two DISTINCT

@@ -332,12 +332,10 @@ object FuzzyJoin {
     * key predicate selects the original copy's names — unique,
     * replica-free — at every probe SF instead of a quadratically
     * inflated dist-0 pair pile (the r10 GenScale lesson). Unbounded
-    * scale evidence for this operator lives on the record (the
-    * `fuzzy_pairs_cname` side-line's history through r18; RETIRED
-    * from every-leg execution in r19 once q=3 was adopted — see
-    * BENCH_FORENSICS_r19_fuzzy_ab_note.txt; re-run on demand via
-    * SPARK_GRAFT_FUZZY_SENTINEL or ProfileFuzzy), not here: the gate
-    * measures correctness, the side-line measured scale.
+    * scale evidence for this operator lives on the record (the bench's
+    * `fuzzy_pairs_cname` forensics line through r18, retired in r19
+    * once q=3 was adopted — see BENCH_FORENSICS_r19_fuzzy_ab_note.txt),
+    * not here: the gate measures correctness, that line measured scale.
     * `dist` is cast to long to match DuckDB's BIGINT. */
   def fuzzyPairsQuery(spark: org.apache.spark.sql.SparkSession,
                       sfDir: String): DataFrame =

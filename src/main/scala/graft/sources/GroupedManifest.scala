@@ -90,7 +90,7 @@ import org.apache.spark.sql.functions._
   * never a silent under-read).
   *
   * MEASURED head-to-head at 100k files / 100 groups (r18,
-  * ProfileManifest, BENCH_FORENSICS_r18_manifest.txt), stated honestly:
+  * BENCH_FORENSICS_r18_manifest.txt), stated honestly:
   * the grouped form's win at this size is DRIVER STATE — 27.7 KB of
   * index vs the flat form's 32.4 MB of collected rows (~1000×) — and
   * maintenance that never collects the whole manifest (writeGroup =
@@ -107,7 +107,7 @@ import org.apache.spark.sql.functions._
   * scaladoc says; this layer is the measured, spec-pinned path PAST
   * that ceiling, where the flat collect becomes tens of seconds and
   * hundreds of driver MB while the index stays O(groups). Bulk
-  * adoption (r19, ProfileManifest, BENCH_FORENSICS_r19_manifest.txt,
+  * adoption (r19, BENCH_FORENSICS_r19_manifest.txt,
   * within-run ratios on a 16-core box): [[buildGrouped]] at 100k files
   * / 100 groups builds in 98.8 s vs the flat build's 85.3 s (1.16×) —
   * within the migration budget where the writeGroup-per-group loop
@@ -407,8 +407,8 @@ final case class GroupedManifest(root: String, statsCols: Seq[String]) {
     * reconciliation tail): apply `drops` + `rewrites` + `adds` with ONE
     * staged index write instead of one per mutation. A bulk retirement
     * of G groups through per-group dropGroup would pay G full index
-    * rewrites — measured 20.0 s for 60 retired groups at ProfileStore's
-    * 240-file point, a quadratic-in-groups term a compaction over a
+    * rewrites — measured 20.0 s for 60 retired groups at a 240-file
+    * store (BENCH_FORENSICS_r19_store.txt), a quadratic-in-groups term a compaction over a
     * large range must not carry. Write order keeps the single-group
     * ops' crash windows: new/rewritten group manifests land FIRST, the
     * index swaps once (staged), dropped manifests are deleted LAST — a

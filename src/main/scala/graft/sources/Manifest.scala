@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * format's log replay holds; it is bounded by the table's file count at
   * build time and by predicate selectivity at read time.
   *
-  * MEASURED CEILING (r18, ProfileManifest over synthesized
+  * MEASURED CEILING (r18, a one-off probe over synthesized
   * 10k/100k/300k-file tables, BENCH_FORENSICS_r18_manifest.txt): the
   * driver-side terms are linear in the file count at ~324 bytes of
   * collected row per file — 10k files: prune 85-91 ms, requireFresh

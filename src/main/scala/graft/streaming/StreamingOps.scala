@@ -687,8 +687,8 @@ object StreamingOps {
     *     exactly that day's committed replays with all prior days'
     *     history present.
     *
-    * Rehearsed end-to-end at the 500k-doc corpus (DayRollRehearsal,
-    * BENCH_FORENSICS_r19_dayroll.txt): day-2/3 walls flat vs day 1, a
+    * Rehearsed end-to-end at the 500k-doc corpus
+    * (BENCH_FORENSICS_r19_dayroll.txt): day-2/3 walls flat vs day 1, a
     * day-2 copy of a day-1 keeper rejected `dup_of_corpus` with the
     * day-1 cluster id, a mid-day-2 crash resumed from the store with
     * day-1 history present, rolled history equal to the unbroken

@@ -48,7 +48,7 @@ import org.apache.spark.sql.functions._
   *
   * Usage: GenScale <srcSfDir> <dstDir> [factor=10]
   * (run via `sbt "runMain graft.tools.GenScale /root/testdata/sf0.1
-  * /tmp/sf1 10"` — dev tool, off the gated surface like ExplainQuery.)
+  * /tmp/sf1 10"` — dev tool, off the gated surface like Profile.)
   */
 object GenScale {
 

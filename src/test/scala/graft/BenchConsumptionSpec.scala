@@ -37,4 +37,36 @@ class BenchConsumptionSpec extends SparkSpec {
     Bench.evaluate(df)
     assert(acc.value >= 100, s"array column unevaluated: ${acc.value}/100")
   }
+
+  test("LayerListener: a shuffle aggregate reports jobs, tasks, shuffle bytes and planning; a map-only select no shuffle") {
+    val l = new Forensics.LayerListener().attach(spark)
+    def measured(df: org.apache.spark.sql.DataFrame): Forensics.Snap = {
+      Forensics.drainListenerBus(spark, l)
+      val s0 = l.snapshot()
+      Bench.evaluate(df)
+      Forensics.drainListenerBus(spark, l)
+      l.snapshot() - s0
+    }
+    try {
+      val agg = measured(spark.range(0, 100000, 1, 4)
+        .groupBy((col("id") % 97).as("k")).agg(sum(col("id"))))
+      assert(agg.jobs >= 1 && agg.nTasks > 0, agg.productIterator.mkString(","))
+      assert(agg.shuffleWriteBytes > 0 && agg.shuffleReadBytes > 0,
+        s"aggregate shuffled nothing: $agg")
+      assert(agg.analysisMs + agg.optimizationMs + agg.planningMs > 0,
+        "no planning phase recorded for the noop write")
+      val map = measured(spark.range(0, 100000, 1, 4)
+        .select((col("id") * 2).as("y")))
+      assert(map.jobs >= 1 && map.nTasks > 0, map.productIterator.mkString(","))
+      assert(map.shuffleWriteBytes == 0 && map.shuffleReadBytes == 0,
+        map.productIterator.mkString(","))
+    } finally {
+      spark.sparkContext.removeSparkListener(l)
+      spark.listenerManager.unregister(l)
+    }
+    // Bench's per-rep text, parsed by tools/scaling_report.py, keeps
+    // exactly the four task fields however many counters a Snap carries
+    assert(Forensics.Snap(12, 3, 4, 5, cpuNs = 9, jobs = 2).toString ==
+      "task=12ms taskGc=3ms sched=4ms ntasks=5")
+  }
 }

@@ -1566,4 +1566,137 @@ class StreamingSpec extends SparkSpec {
     assert(finalHist.filter(col("doc_id") === 202L &&
       col("curation_reject").isNull).count() == 1)
   }
+
+  test("curationIncrementStream over a checkpointed file source: crash after batch 1's store commit, fromStore resume skips the re-delivered batch, history == unbroken run, compactRange keeps per-batch counts") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import org.apache.spark.sql.DataFrame
+    import graft.operators.Dedup
+    import graft.ml.{Bpe, NgramLm}
+    import graft.sources.IncrementStore
+    import StreamingOps.CurationResume
+    // the MemoryStream specs above cannot show the checkpoint's restart
+    // semantics: here a real parquet file source with one file per
+    // trigger feeds the recipe, and the restart re-delivers batch 1 from
+    // the offset log of the SAME checkpointLocation
+    val work = Files.createTempDirectory("cur_file_source").toString
+    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
+    val degenerate = col("text").isNull || col("text").rlike("^\\s*$")
+    // yesterday's curated corpus = even ids; today's crawl = odd ids in
+    // three single-file batches
+    val corpus = docs.filter(col("doc_id") % 2 === 0 && !degenerate).persist(lvl)
+    val labels0 = Dedup.dedupClusters(corpus, threshold = 0.8,
+        candidatePairs = (d, t) => Dedup.minhashPairs(d, "text", threshold = t))
+      .select(col("doc_id"), col("cluster_id")).persist(lvl)
+    val lm = NgramLm.fit(corpus, "text", maxUnigrams = 4096,
+      maxBigrams = 8192, maxTrigrams = 8192)
+    val (bpe, _) = Bpe.fit(corpus, "text", numMerges = 50)
+    val nBatches = 3
+    val batchCounts = (0 until nBatches).map { i =>
+      docs.filter(col("doc_id") % 2 === 1 &&
+          pmod(floor(col("doc_id") / 2), lit(nBatches)) === i)
+        .coalesce(1).write.parquet(s"$work/batches/b$i")
+      spark.read.parquet(s"$work/batches/b$i").count()
+    }
+    val docsSchema = spark.read.parquet(s"$work/batches/b0").schema
+
+    final case class Run(tag: String) {
+      val incoming = Files.createDirectories(Paths.get(s"$work/incoming_$tag"))
+      val ckpt = s"$work/ckpt_$tag"
+      val store = IncrementStore(s"$work/store_$tag/verdicts",
+        s"$work/store_$tag/manifest", filesPerIncrement = 2)
+      val sunk = scala.collection.mutable.ArrayBuffer.empty[Long]
+      // surface batch i as ONE file in one atomic rename (a hidden name
+      // is ignored by the source until then)
+      def feed(i: Int): Unit = {
+        val part = Files.list(Paths.get(s"$work/batches/b$i")).toArray
+          .map(_.asInstanceOf[java.nio.file.Path])
+          .filter(_.getFileName.toString.endsWith(".parquet"))
+        assert(part.length == 1, s"batch $i staged as ${part.length} files")
+        val tmp = incoming.resolve(s".b$i.parquet")
+        Files.copy(part.head, tmp)
+        Files.move(tmp, incoming.resolve(s"b$i.parquet"),
+          StandardCopyOption.ATOMIC_MOVE)
+      }
+      def sink(id: Long, v: DataFrame): Unit = {
+        CurationResume.storeSink(store)(id, v.select(col("doc_id"),
+          col("text"), col("cluster_id"), col("curation_reject")))
+        sunk += id
+      }
+      def start(resume: Option[CurationResume], onVerdicts: (Long, DataFrame) => Unit) =
+        StreamingOps.curationIncrementStream(
+          spark.readStream.schema(docsSchema).option("maxFilesPerTrigger", 1)
+            .parquet(incoming.toString),
+          "doc_id", "text", corpus, labels0, lm, maxPpl = 1e6, bpe,
+          nearThreshold = 0.8, md5Family = false, minKeptRatio = 0.1,
+          resume = resume)(onVerdicts)
+          .option("checkpointLocation", ckpt).start()
+    }
+
+    // ---- run A: batch 1 is durable in the store, then the query dies
+    // before the checkpoint's commit log records it ----
+    val runA = Run("A")
+    val crash = "injected crash between store commit and checkpoint commit"
+    val qA = runA.start(None, (id, v) => {
+      runA.sink(id, v)
+      if (id == 1L) throw new RuntimeException(crash)
+    })
+    try {
+      runA.feed(0); qA.processAllAvailable()
+      runA.feed(1)
+      val e = intercept[Exception](qA.processAllAvailable())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => Option(c.getMessage).exists(_.contains(crash))), e.toString)
+    } finally qA.stop()
+    assert(runA.sunk == Seq(0L, 1L), runA.sunk.toString)
+
+    val resume = CurationResume.fromStore(spark, runA.store)
+    assert(resume.committedBatchIds == Set(0L, 1L), resume.committedBatchIds.toString)
+    val durable = runA.store.readAll(spark).count()
+    assert(durable == batchCounts(0) + batchCounts(1))
+    val qA2 = runA.start(Some(resume), runA.sink)
+    try {
+      // the restart re-delivers batch 1 from the offset log: skipped,
+      // the store's row count does not move
+      qA2.processAllAvailable()
+      assert(runA.store.readAll(spark).count() == durable,
+        "the re-delivered batch 1 was appended twice")
+      runA.feed(2); qA2.processAllAvailable()
+    } finally qA2.stop()
+    assert(runA.sunk == Seq(0L, 1L, 2L), runA.sunk.toString)
+
+    // ---- run B: the unbroken control ----
+    val runB = Run("B")
+    val qB = runB.start(None, runB.sink)
+    try (0 until nBatches).foreach { i => runB.feed(i); qB.processAllAvailable() }
+    finally qB.stop()
+
+    def classCounts(df: DataFrame): Map[String, Long] =
+      df.groupBy(coalesce(col("curation_reject"), lit("keep"))).count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // order-independent digest: per-row xxhash64 over every column, bit_xor'd
+    def digest(df: DataFrame): (Long, Long) = {
+      val r = df.select(xxhash64(col("doc_id"), coalesce(col("cluster_id"), lit(-1L)),
+          coalesce(col("curation_reject"), lit("keep")), col("batch_id"),
+          coalesce(col("text"), lit(""))).as("h"))
+        .agg(count(lit(1)), expr("bit_xor(h)")).head
+      (r.getLong(0), r.getLong(1))
+    }
+    val (histA, histB) = (runA.store.readAll(spark), runB.store.readAll(spark))
+    assert(classCounts(histA) == classCounts(histB))
+    assert(digest(histA) == digest(histB))
+    assert(digest(histA)._1 == batchCounts.sum)
+
+    // ---- maintenance: compactRange the day, per-batch counts kept ----
+    def perBatch(df: DataFrame): Map[Long, Long] =
+      df.groupBy(col("batch_id")).count().collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val before = perBatch(histA)
+    assert(before == batchCounts.indices.map(i => i.toLong -> batchCounts(i)).toMap)
+    val b = histA.agg(min(col("doc_id")), max(col("doc_id"))).head
+    val range = Map("doc_id" -> (b.getLong(0): Any, b.getLong(1): Any))
+    runA.store.compactRange(spark, range, targetFileBytes = 128L << 20)
+    assert(perBatch(runA.store.readRange(spark, range)) == before)
+    Seq(corpus, labels0).foreach(_.unpersist(blocking = false))
+  }
 }

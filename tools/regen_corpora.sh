@@ -4,8 +4,8 @@
 # these exact invocations) — this script IS the recipe, referenced from
 # .claude/skills/verify/SKILL.md.
 #
-#   tools/regen_corpora.sh sf10   # 100x full corpus  -> /tmp/graft_sf10  (~4 min, ~25 GB)
-#   tools/regen_corpora.sh sf1    # 10x full corpus   -> /tmp/graft_sf1   (~1 min)
+#   tools/regen_corpora.sh sf10   # 100x full corpus  -> /tmp/graft_sf10  (~4 min at 32 cores, ~25 GB)
+#   tools/regen_corpora.sh sf1    # 10x full corpus   -> /tmp/graft_sf1   (~1 min at 32 cores)
 #   tools/regen_corpora.sh 5m     # 1000x documents-only -> /tmp/graft_sf100d
 #                                 # (the r16 table filter: 5,000,000 docs,
 #                                 #  560 MB, ~11 min; full tables at 1000x
@@ -24,9 +24,13 @@ if [ ! -f "$JAR" ] || [ -n "$(find src/main -newer "$JAR" -name '*.scala' -print
   sbt -batch package
 fi
 
+# every core, and half the box's memory (at least 2g) for the driver
+CPUS="$(env -u OMP_NUM_THREADS nproc)"
+MEM="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g) "g"}' /proc/meminfo)"
+
 gen() { # gen <dst> <factor> [tableFilter]
   /opt/spark/bin/spark-submit --class graft.tools.GenScale \
-    --master 'local[32]' --driver-memory 48g "$JAR" \
+    --master "local[$CPUS]" --driver-memory "$MEM" "$JAR" \
     /root/testdata/sf0.1 "$@"
 }
 

@@ -49,220 +49,6 @@ def gate_models_build_sec(path):
     return None
 
 
-def minhash_premium(path):
-    """Production-xxhash64 vs gated-md5 minhash pair generation (r9
-    verdict #4): keep the oracle-replay premium on the per-leg record."""
-    with open(path) as f:
-        for line in f:
-            m = re.search(
-                r"minhash_premium production_xxhash64=([0-9.]+) s "
-                r"gated_md5=([0-9.]+) s", line)
-            if m:
-                return {"production_xxhash64_sec": float(m.group(1)),
-                        "gated_md5_sec": float(m.group(2))}
-    return None
-
-
-def lib_additions(path):
-    """Lib-level components without a gated slot (r10): profiler, theta
-    sketch, percentile scoring — keep their wall times on the per-leg
-    record so their scaling is diffable like the gated queries'."""
-    with open(path) as f:
-        for line in f:
-            m = re.search(
-                r"lib_additions profile=([0-9.]+) s "
-                r"theta_sketch_k4096=([0-9.]+) s "
-                r"percentile_score=([0-9.]+) s", line)
-            if m:
-                return {"profile_sec": float(m.group(1)),
-                        "theta_sketch_sec": float(m.group(2)),
-                        "percentile_score_sec": float(m.group(3))}
-    return None
-
-
-def exact_keepfirst_premium(path):
-    """Production-xxhash64 vs gated-md5 exact keep-first window (r15
-    verdict #5: dedup_exact_keep_first was the board's worst sf10 ratio
-    at 29x — this line decomposes hash cost vs exchange cost per leg)."""
-    with open(path) as f:
-        for line in f:
-            m = re.search(
-                r"exact_keepfirst_premium production_xxhash64=([0-9.]+) s "
-                r"gated_md5=([0-9.]+) s", line)
-            if m:
-                return {"production_xxhash64_sec": float(m.group(1)),
-                        "gated_md5_sec": float(m.group(2))}
-    return None
-
-
-def lib_additions2(path):
-    """Second-wave lib additions (r10): interval-overlap join, manifest
-    build, reservoir sample — same per-leg treatment."""
-    with open(path) as f:
-        for line in f:
-            m = re.search(
-                r"lib_additions2 interval_join=([0-9.]+) s "
-                r"manifest_build=([0-9.]+) s "
-                r"reservoir_k64=([0-9.]+) s", line)
-            if m:
-                return {"interval_join_sec": float(m.group(1)),
-                        "manifest_build_sec": float(m.group(2)),
-                        "reservoir_sec": float(m.group(3))}
-    return None
-
-
-def lib_additions3(path):
-    """Third-wave lib additions (r10): substring-span dedup and the NB
-    fit+predict pipeline (nb field absent on pre-NB forensics)."""
-    with open(path) as f:
-        for line in f:
-            m = re.search(
-                r"lib_additions3 substring_spans=([0-9.]+) s"
-                r"(?: nb_fit_predict=([0-9.]+) s)?", line)
-            if m:
-                out = {"substring_spans_sec": float(m.group(1))}
-                if m.group(2):
-                    out["nb_fit_predict_sec"] = float(m.group(2))
-                return out
-    return None
-
-
-def lib_additions4(path):
-    """Fourth-wave lib additions (r11): n-gram LM fit+score, the fuzzy
-    Levenshtein self-join over key-derived customer names, PCA
-    fit+project, compress-ratio scan, BPE 200-merge fit+count."""
-    with open(path) as f:
-        for line in f:
-            m = re.search(
-                r"lib_additions4 ngram_lm_fit_score=([0-9.]+) s "
-                r"fuzzy_pairs_cname=([0-9.]+) s (?:\(q=3 adopted r18\) )?"
-                r"pca_fit_project=([0-9.]+) s "
-                r"compress_ratio=([0-9.]+) s bpe_fit200_count=([0-9.]+) s"
-                r"(?: \(med of 3; fuzzy: ([^)]+)\))?", line)
-            if m:
-                out = {"ngram_lm_fit_score_sec": float(m.group(1)),
-                       "fuzzy_pairs_cname_sec": float(m.group(2)),
-                       "pca_fit_project_sec": float(m.group(3)),
-                       "compress_ratio_sec": float(m.group(4)),
-                       "bpe_fit200_count_sec": float(m.group(5))}
-                # Bench.medOrRep1 makes the fuzzy number's protocol
-                # data-dependent (rep1 over budget vs med-of-3); carry
-                # the label into the artifact so cross-round comparisons
-                # never silently mix protocols (r12 ADVICE).
-                if m.group(6):
-                    out["fuzzy_protocol"] = m.group(6)
-                return out
-    return None
-
-
-def lib_additions5(path):
-    """Fifth-wave lib additions (r12): map-side vs join-form LM scoring,
-    pairwise span attribution, PCA reconstruction-error and whitening."""
-    with open(path) as f:
-        for line in f:
-            m = re.search(
-                r"lib_additions5 lm_score_join=([0-9.]+) s "
-                r"lm_score_mapside=([0-9.]+) s shared_span_pairs=([0-9.]+) s "
-                r"pca_rec_err=([0-9.]+) s pca_whitened=([0-9.]+) s", line)
-            if m:
-                return {"lm_score_join_sec": float(m.group(1)),
-                        "lm_score_mapside_sec": float(m.group(2)),
-                        "shared_span_pairs_sec": float(m.group(3)),
-                        "pca_rec_err_sec": float(m.group(4)),
-                        "pca_whitened_sec": float(m.group(5))}
-    return None
-
-
-def lib_additions6(path):
-    """Sixth-wave lib additions (r13): sampled mega-df span attribution
-    (same n/maxDf as the base shared_span_pairs line) and the end-to-end
-    curation recipe; the recipe's protocol label (rep1-over-budget vs
-    med-of-3) rides along like lib_additions4's fuzzy label."""
-    with open(path) as f:
-        for line in f:
-            m = re.search(
-                r"lib_additions6 span_pairs_sampled=([0-9.]+) s "
-                r"curate_corpus=([0-9.]+) s"
-                r"(?: curate_increment=([0-9.]+) s)?"
-                r"(?: \(med of 3; curate: ([^)]+)\))?", line)
-            if m:
-                out = {"span_pairs_sampled_sec": float(m.group(1)),
-                       "curate_corpus_sec": float(m.group(2))}
-                if m.group(3):
-                    out["curate_increment_sec"] = float(m.group(3))
-                if m.group(4):
-                    out["curate_protocol"] = m.group(4)
-                return out
-    return None
-
-
-def lib_additions7(path):
-    """Seventh-wave lib additions (r16): the IncrementStore daily-verdict
-    storage pair — day-1 clustered+manifested write, day-2 append with
-    O(increment) manifest maintenance, and the day-2 pruned read priced
-    against the full-scan filter it row-equals (files M/N = survivors of
-    the day-2 band / total manifest files)."""
-    with open(path) as f:
-        for line in f:
-            m = re.search(
-                r"lib_additions7 store_day1_write=([0-9.]+) s "
-                r"store_day2_append=([0-9.]+) s read_pruned=([0-9.]+) s "
-                r"read_full=([0-9.]+) s files=(\d+)/(\d+)", line)
-            if m:
-                out = {"store_day1_write_sec": float(m.group(1)),
-                       "store_day2_append_sec": float(m.group(2)),
-                       "read_pruned_sec": float(m.group(3)),
-                       "read_full_sec": float(m.group(4)),
-                       "pruned_files": int(m.group(5)),
-                       "total_files": int(m.group(6))}
-                # r17 maintenance-job fields (absent on r16 logs)
-                d = re.search(
-                    r"delete=([0-9.]+) s \((\d+) rows, (\d+)/(\d+) files\) "
-                    r"compact=([0-9.]+) s", line)
-                if d:
-                    out.update({
-                        "delete_sec": float(d.group(1)),
-                        "delete_rows": int(d.group(2)),
-                        "delete_files_rewritten": int(d.group(3)),
-                        "delete_files_total": int(d.group(4)),
-                        "compact_sec": float(d.group(5))})
-                return out
-    return None
-
-
-def bpe_fit32k(path):
-    """BPE at realistic merge scale (r12): corpus fit at 32768 requested
-    merges (learned count reported — the corpus may exhaust first) and
-    the driver-loop leg over the seeded 64k-type Zipf word table."""
-    with open(path) as f:
-        for line in f:
-            m = re.search(
-                r"bpe_fit32k corpus_fit=([0-9.]+) s corpus_learned=(\d+) "
-                r"driver_loop_64k_types=([0-9.]+) s driver_learned=(\d+)", line)
-            if m:
-                return {"corpus_fit_sec": float(m.group(1)),
-                        "corpus_learned": int(m.group(2)),
-                        "driver_loop_64k_types_sec": float(m.group(3)),
-                        "driver_learned": int(m.group(4))}
-    return None
-
-
-def asof_native(path):
-    """Native-merge as-of operator vs the gated union+window formulation
-    (r10): same inputs, same result, two plans — keep both wall times on
-    the per-leg record so the native operator's advantage is a measured
-    curve, not a plan-shape claim."""
-    with open(path) as f:
-        for line in f:
-            m = re.search(
-                r"asof_native union_window=([0-9.]+) s "
-                r"native_merge=([0-9.]+) s", line)
-            if m:
-                return {"union_window_sec": float(m.group(1)),
-                        "native_merge_sec": float(m.group(2))}
-    return None
-
-
 def health(path, bench_json):
     """Per-leg box-health block (r15 verdict #2): load average at launch,
     fresh-page supply rate (MB/s, 512 MB direct-buffer touch), and JVM
@@ -514,17 +300,6 @@ def main():
                   "wave_rerun": rr_small,
                   "index_build_sec": index_build_sec(small_path),
                   "gate_models_build_sec": gate_models_build_sec(small_path),
-                  "minhash_premium": minhash_premium(small_path),
-                  "exact_keepfirst_premium": exact_keepfirst_premium(small_path),
-                  "lib_additions": lib_additions(small_path),
-                  "lib_additions2": lib_additions2(small_path),
-                  "lib_additions3": lib_additions3(small_path),
-                  "lib_additions4": lib_additions4(small_path),
-                  "lib_additions5": lib_additions5(small_path),
-                  "lib_additions6": lib_additions6(small_path),
-                  "lib_additions7": lib_additions7(small_path),
-                  "bpe_fit32k": bpe_fit32k(small_path),
-                  "asof_native": asof_native(small_path),
                   "queries": qs},
         "big": {"sf_dir": big.get("sf"), "total_sec": big["value"],
                 "health": h_big,
@@ -532,17 +307,6 @@ def main():
                 "wave_rerun": rr_big,
                 "index_build_sec": index_build_sec(big_path),
                 "gate_models_build_sec": gate_models_build_sec(big_path),
-                "minhash_premium": minhash_premium(big_path),
-                "exact_keepfirst_premium": exact_keepfirst_premium(big_path),
-                "lib_additions": lib_additions(big_path),
-                "lib_additions2": lib_additions2(big_path),
-                "lib_additions3": lib_additions3(big_path),
-                "lib_additions4": lib_additions4(big_path),
-                "lib_additions5": lib_additions5(big_path),
-                "lib_additions6": lib_additions6(big_path),
-                "lib_additions7": lib_additions7(big_path),
-                "bpe_fit32k": bpe_fit32k(big_path),
-                "asof_native": asof_native(big_path),
                 "queries": qb},
         "total_ratio": round(big["value"] / small["value"], 2),
         "median_query_ratio": median,
