@@ -24,9 +24,14 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   *     z = (x−m)/sd (normalize_data, population std);
   * and the window's T×F values are interleaved row-major (time, feature).
   * Labels: `widx = (e−t)/skip`, `rul = min(rulCap, n−e)`. A trajectory
-  * shorter than `t` or than `minLen` emits no window (`minLen = t` is the
-  * plain rule; the padded callers pass `t·skip`, the length below which
-  * their pad branch takes the trajectory instead).
+  * shorter than `t` emits no window.
+  *
+  * With `padTo > 0` a trajectory of n < `padTo` points is first brought to
+  * `padTo` points (the train-path backfill of turbofan.py:133-138): it is
+  * max-scaled over its n real points, then its leading `padTo − n` slots
+  * repeat its first scaled value, and the windows and labels run over the
+  * padded length (`rul = min(rulCap, padTo − e)`: padded steps count as
+  * life). A trajectory of at least `padTo` points is not padded.
   *
   * Every floating-point step is the same operation in the same order as
   * the per-row formulation it replaces (max-scale division, sequential
@@ -39,13 +44,15 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * Called once per trajectory, never per row, so interpreted evaluation
   * ([[CodegenFallback]]) costs nothing measurable. */
 case class WindowTensors(child: Expression, nOrder: Int, names: Seq[String],
-    settings: Seq[Boolean], t: Int, skip: Int, rulCap: Int, minLen: Int)
+    settings: Seq[Boolean], t: Int, skip: Int, rulCap: Int, padTo: Int)
     extends UnaryExpression with CodegenFallback {
 
   require(t >= 1, "window length t must be >= 1")
   require(skip >= 1, "window stride skip must be >= 1")
   require(names.length == settings.length,
     "one setting flag per feature column")
+  require(padTo == 0 || padTo >= t,
+    s"pad length $padTo must be 0 (no padding) or at least the window length $t")
 
   private val nF = names.length
   private val isSetting = settings.toArray
@@ -64,9 +71,12 @@ case class WindowTensors(child: Expression, nOrder: Int, names: Seq[String],
   override def nullSafeEval(input: Any): Any = {
     val pts = input.asInstanceOf[ArrayData]
     val n = pts.numElements()
-    if (n < t || n < minLen) return new GenericArrayData(Array.empty[Any])
-    // scaled values, one column per feature
-    val s = Array.ofDim[Double](nF, n)
+    val len = math.max(n, padTo)
+    if (n == 0 || len < t) return new GenericArrayData(Array.empty[Any])
+    // scaled values, one column per feature; the real points sit after
+    // the `off` pad slots
+    val off = len - n
+    val s = Array.ofDim[Double](nF, len)
     var i = 0
     while (i < n) {
       val p = pts.getStruct(i, nOrder + nF)
@@ -76,7 +86,7 @@ case class WindowTensors(child: Expression, nOrder: Int, names: Seq[String],
           throw new IllegalArgumentException(
             s"[TENSORIZE_NULL_VALUE] feature column `${names(f)}` holds a null " +
               "value; window tensors need every value of a trajectory")
-        s(f)(i) = p.getDouble(nOrder + f)
+        s(f)(off + i) = p.getDouble(nOrder + f)
         f += 1
       }
       i += 1
@@ -85,9 +95,9 @@ case class WindowTensors(child: Expression, nOrder: Int, names: Seq[String],
     while (f < nF) {
       val col = s(f)
       // Spark's max: NaN is the largest double
-      var mx = col(0)
-      i = 1
-      while (i < n) {
+      var mx = col(off)
+      i = off + 1
+      while (i < len) {
         val x = col(i)
         if (x.isNaN || (!mx.isNaN && x > mx)) mx = x
         i += 1
@@ -96,11 +106,12 @@ case class WindowTensors(child: Expression, nOrder: Int, names: Seq[String],
         throw new IllegalArgumentException(
           s"[TENSORIZE_ZERO_MAX] feature column `${names(f)}` has max 0 in a " +
             "trajectory; max-scaling would divide by zero")
-      i = 0
-      while (i < n) { col(i) = col(i) / mx; i += 1 }
+      i = off
+      while (i < len) { col(i) = col(i) / mx; i += 1 }
+      java.util.Arrays.fill(col, 0, off, col(off))
       f += 1
     }
-    val nWin = (n - t) / skip + 1
+    val nWin = (len - t) / skip + 1
     val out = new Array[Any](nWin)
     var w = 0
     while (w < nWin) {
@@ -133,7 +144,7 @@ case class WindowTensors(child: Expression, nOrder: Int, names: Seq[String],
         f += 1
       }
       out(w) = InternalRow(w.toLong, new GenericArrayData(feats),
-        math.min(rulCap.toLong, (n - end).toLong))
+        math.min(rulCap.toLong, (len - end).toLong))
       w += 1
     }
     new GenericArrayData(out)
@@ -154,7 +165,7 @@ object WindowTensors {
 
   def apply(points: Column, nOrder: Int, names: Seq[String],
             settings: Seq[Boolean], t: Int, skip: Int, rulCap: Int,
-            minLen: Int): Column =
+            padTo: Int): Column =
     ColumnBridge.column(WindowTensors(ColumnBridge.expression(points),
-      nOrder, names, settings, t, skip, rulCap, minLen))
+      nOrder, names, settings, t, skip, rulCap, padTo))
 }

@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.Tables
 
 /** Array-valued ("tensor") forms of the reference's windowing pipeline —
@@ -17,8 +16,9 @@ import graft.Tables
   * expression scales, windows, normalizes and labels them in plain loops;
   * `inline` turns its array into one row per window. The only shuffle is
   * that one hash exchange on the key, at any scale. Per-key memory is the
-  * sorted trajectory, n × (|order| + F) values — the same order as the
-  * unbounded `max().over(key)` frame buffer of a window formulation.
+  * sorted trajectory, n × (|order| + F) values, plus its scaled copy
+  * padded to `padTo` — the same order as the unbounded `max().over(key)`
+  * frame buffer of a window formulation.
   *
   * The tensor frame is planned once, when it is built
   * ([[graft.plans.SharedShuffle]]): the groupBy → kernel → `inline`
@@ -50,9 +50,9 @@ object Tensorize {
     */
   def windowTensorize(df: DataFrame, key: String, order: Seq[String],
                       valueCol: String, t: Int, skip: Int, rulCap: Int,
-                      minLen: Int = 0): DataFrame =
+                      padTo: Int = 0): DataFrame =
     windowTensorizeMulti(df, key, order, Seq(valueCol), t, skip, rulCap,
-      minLen = minLen)
+      padTo = padTo)
 
   /** Multi-feature variant of [[windowTensorize]] — the reference's
     * (N, T, F) tensors with F = several sensor/setting columns
@@ -69,20 +69,24 @@ object Tensorize {
     * Values are cast to double before scaling. A null value or a column
     * whose trajectory max is 0 fails the query with a named error
     * (TENSORIZE_NULL_VALUE / TENSORIZE_ZERO_MAX); a trajectory shorter
-    * than `t`, or than `minLen` when that is larger, emits no window;
-    * null keys form their own trajectory. */
+    * than `t` emits no window; null keys form their own trajectory.
+    *
+    * `padTo > 0` (at least `t`) front-pads a trajectory shorter than
+    * `padTo` to `padTo` points with its first scaled observation before
+    * windowing, and the padded length feeds the RUL labels — see
+    * [[graft.functions.WindowTensors]]. */
   def windowTensorizeMulti(df: DataFrame, key: String, order: Seq[String],
                            valueCols: Seq[String], t: Int, skip: Int,
                            rulCap: Int,
                            settingCols: Set[String] = Set.empty,
-                           minLen: Int = 0): DataFrame = {
+                           padTo: Int = 0): DataFrame = {
     val point = struct(order.map(col) ++ valueCols.zipWithIndex.map {
       case (c, i) => col(c).cast("double").as(s"_v$i") }: _*)
     graft.plans.SharedShuffle(df.groupBy(col(key))
       .agg(sort_array(collect_list(point)).as("_pts"))
       .select(col(key), inline(graft.functions.WindowTensors(col("_pts"),
         order.length, valueCols, valueCols.map(settingCols.contains),
-        t, skip, rulCap, minLen))))
+        t, skip, rulCap, padTo))))
   }
 
   /** music._change_to_seq_len: bring every trajectory to exactly `t` steps —
@@ -91,6 +95,13 @@ object Tensorize {
     */
   def padTruncate(df: DataFrame, key: String, tsOrderCol: String,
                   valueCol: String, t: Int): DataFrame =
+    lastWindow(df, key, tsOrderCol, valueCol, t, _ => lit(0.0))
+
+  /** The last `t` values of each trajectory by `tsOrderCol`, front-padded
+    * to `t` with `pad(vals)` when shorter: (key, orig_len, seq). */
+  private def lastWindow(df: DataFrame, key: String, tsOrderCol: String,
+                         valueCol: String, t: Int,
+                         pad: Column => Column): DataFrame =
     df.groupBy(col(key))
       .agg(sort_array(collect_list(struct(col(tsOrderCol), col(valueCol)))).as("pts"))
       .withColumn("orig_len", size(col("pts")))
@@ -98,7 +109,8 @@ object Tensorize {
       .withColumn("seq",
         when(col("orig_len") >= t, slice(col("vals"), -t, t))
           .otherwise(concat(
-            array_repeat(lit(0.0), (lit(t) - col("orig_len")).cast("int")), col("vals"))))
+            array_repeat(pad(col("vals")), (lit(t) - col("orig_len")).cast("int")),
+            col("vals"))))
       .select(col(key), col("orig_len"), col("seq"))
 
   /** Teacher-forcing next-step pairs — the music-forecasting train/test
@@ -123,16 +135,20 @@ object Tensorize {
     * ([[windowTensorize]]) and is spec-verified.
     */
   def tsWindowTensorize(spark: SparkSession, sfDir: String): DataFrame =
-    windowTensorize(
+    zDigests(windowTensorize(
       Tables.events(spark, sfDir).withColumn("ts_us", unix_micros(col("ts"))),
-      "user_id", Seq("ts_us", "event_id"), "value", t = 20, skip = 5, rulCap = 130)
-      .select(col("user_id"), col("widx"),
-        col("rul").cast("long").as("rul"),
-        // + 0.0 folds a -0.0 round output (z-score in (-0.5e-6, 0) under
-        // DuckDB's float round) to +0.0; mirrored in the oracle SQL
-        (round(array_min(col("features")), 6) + lit(0.0)).as("z_min"),
-        (round(array_max(col("features")), 6) + lit(0.0)).as("z_max"),
-        (round(element_at(col("features"), -1), 6) + lit(0.0)).as("z_last"))
+      "user_id", Seq("ts_us", "event_id"), "value", t = 20, skip = 5, rulCap = 130),
+      "user_id")
+
+  /** (key, widx, rul, z_min, z_max, z_last) of a tensor frame. */
+  private def zDigests(tensors: DataFrame, key: String): DataFrame =
+    tensors.select(col(key), col("widx"),
+      col("rul").cast("long").as("rul"),
+      // + 0.0 folds a -0.0 round output (z-score in (-0.5e-6, 0) under
+      // DuckDB's float round) to +0.0; mirrored in the oracle SQL
+      (round(array_min(col("features")), 6) + lit(0.0)).as("z_min"),
+      (round(array_max(col("features")), 6) + lit(0.0)).as("z_max"),
+      (round(element_at(col("features"), -1), 6) + lit(0.0)).as("z_last"))
 
   /** DuckDB oracle for [[tsWindowTensorize]]: the same scale → window →
     * z-norm pipeline via window frames (z_min/z_max are monotone under the
@@ -168,84 +184,17 @@ object Tensorize {
     * padded length feeds the RUL labels (`y = len_padded − T − i·skip`,
     * exactly as numpy computes it — padded steps count as life).
     *
-    * Scale shape: long trajectories take the plain one-shuffle
-    * [[windowTensorize]] path; the pad branch re-shuffles ONLY the short
-    * keys (a groupBy whose per-key state is bounded by T·skip values), so
-    * at corpus scale the extra cost is proportional to the short tail, not
-    * the table.
-    *
-    * The long branch routes itself: its kernel takes `minLen = T·skip`,
-    * so a trajectory shorter than that emits no window there. The short
-    * branch's routing is a per-key COUNT AGGREGATE joined back (one row
-    * per trajectory — map-side partials, tiny shuffle; AQE broadcasts the
-    * join at any realistic trajectory cardinality), NOT a
-    * `count().over(key)` window, which paid a full shuffle+sort of the
-    * fact table. Requires a NON-NULL trajectory key (true of every source
-    * this library ingests); the exclusion of null-key rows is ENFORCED by
-    * an explicit filter below (and pinned by spec), not left to the
-    * equi-join's drop semantics — the old window form kept such rows as
-    * their own partition, and a silent behavior change on a future
-    * null-key source is worse than a visible contract. */
+    * One [[windowTensorize]] call with `padTo = T·skip`: the kernel pads
+    * a short trajectory itself, so long and short trajectories share the
+    * one groupBy shuffle and no routing aggregate or join is planned.
+    * Requires a NON-NULL trajectory key (true of every source this library
+    * ingests); null-key rows are dropped by an explicit filter (pinned by
+    * spec) rather than windowed as a trajectory of their own. */
   def windowTensorizePadded(df: DataFrame, key: String, order: Seq[String],
                             valueCol: String, t: Int, skip: Int,
-                            rulCap: Int): DataFrame = {
-    val padLen = t * skip
-    // the documented non-null-key contract, made load-bearing: null keys
-    // are dropped HERE, deliberately and visibly (the predicate pushes to
-    // the scan), so the routing join below never decides their fate
-    val in = df.filter(col(key).isNotNull)
-    val counts = in.groupBy(col(key)).agg(count(lit(1)).as("n_all"))
-    val long = windowTensorize(in, key, order, valueCol, t, skip, rulCap,
-        minLen = padLen)
-      .select(col(key), col("widx"),
-        col("rul").cast("long").as("rul"),
-        (round(array_min(col("features")), 6) + lit(0.0)).as("z_min"),
-        (round(array_max(col("features")), 6) + lit(0.0)).as("z_max"),
-        (round(element_at(col("features"), -1), 6) + lit(0.0)).as("z_last"))
-    // short branch: scale (scale_data runs BEFORE padding in the
-    // reference, and padding repeats the scaled first observation), pad to
-    // T·skip, then stride windows map-side out of the bounded array
-    val short = shortPaddedWindows(in, key, order, valueCol, counts,
-        padLen, t, skip)
-      .select(col(key), col("j").cast("long").as("widx"),
-        least(lit(rulCap.toLong), lit((padLen - t).toLong) - col("j") * skip)
-          .cast("long").as("rul"),
-        (round((array_min(col("win")) - col("m")) / col("sd"), 6) + lit(0.0)).as("z_min"),
-        (round((array_max(col("win")) - col("m")) / col("sd"), 6) + lit(0.0)).as("z_max"),
-        (round((element_at(col("win"), -1) - col("m")) / col("sd"), 6) + lit(0.0)).as("z_last"))
-    long.unionByName(short)
-  }
-
-  /** The short-trajectory padded-window recurrence shared by
-    * [[windowTensorizePadded]] and [[augmentedTestWindows]] (factored in
-    * self-review — the two copies had already drifted once in spirit):
-    * scale → front-pad with the first scaled observation to `padLen` →
-    * stride windows out of the bounded array → per-window z moments,
-    * same fold order as [[windowTensorize]]. Emits
-    * (key, j, win, m, sd) for the caller's final projection. */
-  private def shortPaddedWindows(in: DataFrame, key: String,
-      order: Seq[String], valueCol: String, counts: DataFrame,
-      padLen: Int, t: Int, skip: Int): DataFrame = {
-    val wKey = Window.partitionBy(col(key))
-    in.join(counts.filter(col("n_all") < padLen).select(col(key)), Seq(key))
-      .withColumn("_v", col(valueCol) / max(col(valueCol)).over(wKey))
-      .groupBy(col(key))
-      .agg(sort_array(collect_list(
-        struct(order.map(col) :+ col("_v"): _*))).as("pts"))
-      .withColumn("vals", transform(col("pts"), p => p("_v")))
-      .withColumn("padded", concat(
-        array_repeat(element_at(col("vals"), 1),
-          (lit(padLen) - size(col("vals"))).cast("int")),
-        col("vals")))
-      .select(col(key),
-        explode(sequence(lit(0), lit((padLen - t) / skip))).as("j"),
-        col("padded"))
-      .withColumn("win", slice(col("padded"), col("j") * skip + 1, lit(t)))
-      .withColumn("m", aggregate(col("win"), lit(0.0), (a, x) => a + x) / lit(t))
-      .withColumn("sd0", sqrt(aggregate(col("win"), lit(0.0),
-        (a, x) => a + (x - col("m")) * (x - col("m"))) / lit(t)))
-      .withColumn("sd", when(col("sd0") <= lit(1e-12), lit(1.0)).otherwise(col("sd0")))
-  }
+                            rulCap: Int): DataFrame =
+    zDigests(windowTensorize(df.filter(col(key).isNotNull), key, order,
+      valueCol, t, skip, rulCap, padTo = t * skip), key)
 
   def tsWindowTensorizePadded(spark: SparkSession, sfDir: String): DataFrame =
     windowTensorizePadded(
@@ -372,40 +321,22 @@ object Tensorize {
     * Critically, the cap applies to the SUM, not to the trajectory-relative
     * part alone — so the inner tensorize runs uncapped and the external
     * offset joins BEFORE the single `least`. `labels` is per-trajectory
-    * (key, rul_provided) — dim-sized, broadcast. Same scale shape as
-    * [[windowTensorizePadded]]: long trajectories take the one-shuffle
-    * window path, only the short tail pays the bounded-array pad branch.
+    * (key, rul_provided) — dim-sized, broadcast. Same kernel call as
+    * [[windowTensorizePadded]] (`padTo = T·skip`, null keys dropped).
     *
     * Output: (key, widx, features: array<double> length T, rul).
     */
   def augmentedTestWindows(df: DataFrame, labels: DataFrame, key: String,
                            order: Seq[String], valueCol: String, t: Int,
-                           skip: Int, rulCap: Int): DataFrame = {
-    val padLen = t * skip
-    val in = df.filter(col(key).isNotNull)
-    val counts = in.groupBy(col(key)).agg(count(lit(1)).as("n_all"))
-    // long branch: every window of a trajectory of at least T·skip
-    // points, with the UNCAPPED trajectory-relative label (rulCap =
-    // MaxValue disables the inner least; the real cap is applied once,
-    // after the external offset)
-    val long = windowTensorize(in, key, order, valueCol, t, skip,
-        rulCap = Int.MaxValue, minLen = padLen)
-      .select(col(key), col("widx"), col("features"),
-        col("rul").cast("long").as("rel_rul"))
-    // short branch: the shared padded-window recurrence
-    // ([[shortPaddedWindows]]), emitting the full z-normed window
-    // instead of windowTensorizePadded's scalar digests
-    val short = shortPaddedWindows(in, key, order, valueCol, counts,
-        padLen, t, skip)
-      .select(col(key), col("j").cast("long").as("widx"),
-        transform(col("win"), x => (x - col("m")) / col("sd")).as("features"),
-        (lit((padLen - t).toLong) - col("j") * skip).as("rel_rul"))
-    long.unionByName(short)
+                           skip: Int, rulCap: Int): DataFrame =
+    // rulCap = MaxValue leaves the trajectory-relative label uncapped; the
+    // real cap is applied once, after the external offset
+    windowTensorize(df.filter(col(key).isNotNull), key, order, valueCol,
+        t, skip, rulCap = Int.MaxValue, padTo = t * skip)
       .join(broadcast(labels), Seq(key))
       .withColumn("rul",
-        least(lit(rulCap.toLong), col("rel_rul") + col("rul_provided").cast("long")))
+        least(lit(rulCap.toLong), col("rul") + col("rul_provided").cast("long")))
       .select(col(key), col("widx"), col("features"), col("rul"))
-  }
 
   /** Inference-only windowing for the UNLABELED challenge split — the
     * reference's test-set construction (turbofan.py:106-113): trajectories
@@ -415,16 +346,7 @@ object Tensorize {
     * minus the label join. */
   def inferenceWindow(df: DataFrame, key: String, tsOrderCol: String,
                       valueCol: String, t: Int): DataFrame =
-    df.groupBy(col(key))
-      .agg(sort_array(collect_list(struct(col(tsOrderCol), col(valueCol)))).as("pts"))
-      .withColumn("orig_len", size(col("pts")))
-      .withColumn("vals", transform(col("pts"), p => p(valueCol)))
-      .withColumn("seq",
-        when(col("orig_len") >= t, slice(col("vals"), -t, t))
-          .otherwise(concat(
-            array_repeat(element_at(col("vals"), 1),
-              (lit(t) - col("orig_len")).cast("int")), col("vals"))))
-      .select(col(key), col("orig_len"), col("seq"))
+    lastWindow(df, key, tsOrderCol, valueCol, t, element_at(_, 1))
 
   /** SparkEntry glue: last-64-step validation window per trajectory, with
     * the per-trajectory RUL labels INGESTED from an external space-separated

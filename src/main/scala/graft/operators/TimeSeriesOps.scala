@@ -155,11 +155,11 @@ object TimeSeriesOps {
     val w = perKey(key, order)
     val wAll = Window.partitionBy(col(key))
     df.withColumn("rn", row_number().over(w))
-      .withColumn("n_all", count(lit(1)).over(wAll))
+      .withColumn("n_key", count(lit(1)).over(wAll))
       .withColumn("fold",
-        when(col("rn") <= ceil(col("n_all") * trainRatio), lit("train"))
+        when(col("rn") <= ceil(col("n_key") * trainRatio), lit("train"))
           .otherwise(lit("test")))
-      .drop("rn", "n_all")
+      .drop("rn", "n_key")
   }
 
   /** Walk-forward (expanding-window) validation folds — the time-series

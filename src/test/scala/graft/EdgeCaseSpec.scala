@@ -132,9 +132,9 @@ class EdgeCaseSpec extends SparkSpec {
       val (_, zmin, zmax) = rows((su, 0L))
       assert(zmin == 0.0 && zmax == 0.0)
     }
-    // synthetic long + short mix: both union branches fire and agree with
-    // first principles (all gated users are short, so the long side of the
-    // union is only exercised here)
+    // synthetic long + short mix: the unpadded and the padded trajectory
+    // agree with first principles (all gated users are short, so an
+    // unpadded trajectory is only exercised here)
     val mix = ((1 to 150).map(i => (1L, i.toLong, i.toLong, i.toDouble)) ++
                (1 to 30).map(i => (2L, i.toLong, i.toLong, i.toDouble)))
       .toDF("user_id", "ts_us", "event_id", "value")
@@ -200,6 +200,24 @@ class EdgeCaseSpec extends SparkSpec {
     }
     assert(messages(multi).contains("[TENSORIZE_NULL_VALUE] feature column `v`"),
       messages(multi))
+    // padded to T·skip = 12, the 8-point trajectory must fail the same way
+    assertPaddedFails(df, "v", "[TENSORIZE_NULL_VALUE] feature column `v`")
+  }
+
+  /** `windowTensorizePadded` and `augmentedTestWindows` with T = 4,
+    * skip = 3 (a trajectory of under 12 points is padded) fail with `named`. */
+  private def assertPaddedFails(df: org.apache.spark.sql.DataFrame,
+                                valueCol: String, named: String): Unit = {
+    val padded = intercept[Exception] {
+      operators.Tensorize.windowTensorizePadded(df, "k", Seq("t"), valueCol,
+        4, 3, 100).collect()
+    }
+    assert(messages(padded).contains(named), messages(padded))
+    val augmented = intercept[Exception] {
+      operators.Tensorize.augmentedTestWindows(df, Seq((1L, 5L)).toDF("k", "rul_provided"),
+        "k", Seq("t"), valueCol, 4, 3, 100).collect()
+    }
+    assert(messages(augmented).contains(named), messages(augmented))
   }
 
   test("window tensorize: an all-zero column fails with a named error") {
@@ -210,6 +228,7 @@ class EdgeCaseSpec extends SparkSpec {
         4, 2, 100).collect()
     }
     assert(messages(e).contains("[TENSORIZE_ZERO_MAX] feature column `w`"), messages(e))
+    assertPaddedFails(df, "w", "[TENSORIZE_ZERO_MAX] feature column `w`")
   }
 
   test("window tensorize: a trajectory shorter than T emits no windows") {
@@ -231,6 +250,17 @@ class EdgeCaseSpec extends SparkSpec {
     def digest(rs: Array[org.apache.spark.sql.Row]) =
       rs.map(r => (r.getLong(1), r.getSeq[Double](2), r.getLong(3))).toSet
     assert(nullKey.length == 3 && digest(nullKey) == digest(key7))
+  }
+
+  test("window tensorize: a pad length below T is rejected") {
+    val df = series((1 to 8).map(i => (1L: java.lang.Long, i.toLong,
+      i.toDouble: java.lang.Double, 1.0)))
+    val e = intercept[IllegalArgumentException] {
+      operators.Tensorize.windowTensorize(df, "k", Seq("t"), "v",
+        t = 4, skip = 2, rulCap = 100, padTo = 3)
+    }
+    assert(e.getMessage.contains("pad length 3 must be 0 (no padding) or at least " +
+      "the window length 4"), e.getMessage)
   }
 
   test("round-7 op guardrails fail loudly on misuse") {

@@ -64,15 +64,18 @@ class SharedShuffleSpec extends SparkSpec {
       withConf("spark.sql.shuffle.partitions" -> n.toString,
           "spark.sql.adaptive.enabled" -> aqe) {
         val s = split(file)
-        val catalog = Tensorize.tsWindowTensorize(spark, sf)
-          .collect().map(_.toSeq).toSet
+        val catalog = Seq(Tensorize.tsWindowTensorize(spark, sf),
+            Tensorize.tsWindowTensorizePadded(spark, sf))
+          .map(_.collect().map(_.toSeq).toSet)
         (n, aqe, rows(s), catalog, if (n == 4) Some(fitAndScore(s)) else None)
       }
     val (_, _, baseRows, baseCatalog, _) = runs.head
-    assert(baseRows.size == 15 && baseCatalog.nonEmpty)
+    assert(baseRows.size == 15 && baseCatalog.forall(_.nonEmpty))
     runs.foreach { case (n, aqe, r, c, fit) =>
       assert(r == baseRows, s"tensor rows or folds differ at $n partitions, AQE $aqe")
-      assert(c == baseCatalog, s"ts_window_tensorize differs at $n partitions, AQE $aqe")
+      assert(c(0) == baseCatalog(0), s"ts_window_tensorize differs at $n partitions, AQE $aqe")
+      assert(c(1) == baseCatalog(1),
+        s"ts_window_tensorize_padded differs at $n partitions, AQE $aqe")
       // the weights and MSEs of the uncoalesced 4-partition plan, with the
       // same summation order as before the frame was planned once
       fit.foreach { case (w, mse) =>

@@ -175,8 +175,8 @@ class TimeSeriesSpec extends SparkSpec {
     // guard → all-zero z-features
     assert(byKey(2).head.getAs[scala.collection.Seq[Double]]("features") ==
       Seq(0.0, 0.0, 0.0, 0.0))
-    // long-branch features match the rul=None tensorize bit-for-bit (the
-    // branches share the scale → window → z-norm arithmetic)
+    // the unpadded trajectory's features match the rul=None tensorize
+    // bit-for-bit (one kernel: scale → window → z-norm)
     val unlabeled = Tensorize.windowTensorize(
         df.filter(col("k") === 1), "k", Seq("t"), "v", t = 4, skip = 2, rulCap = 100)
       .orderBy("widx").collect().map(_.getAs[scala.collection.Seq[Double]]("features"))
