@@ -19,6 +19,17 @@ import org.apache.spark.sql.SparkSession
   *  - applicationSideScanSizeThreshold is lowered from the 10 GB default
   *    so the filter also fires at test scale; at 100 TB any fact scan
   *    clears either bar.
+  *  - The split rule: a file scan cuts its input into splits of
+  *    `min(maxPartitionBytes, max(openCostInBytes, bytes / cores))`,
+  *    where `bytes` counts every file once more at `openCostInBytes`.
+  *    Spark's 4 MB default makes that floor 4 MB, so a single few-MB
+  *    file is read by fewer tasks than there are cores. With 1 MB, the
+  *    TurboFan `train.txt` (5.16 MB, perfbench seed 3, 4 cores) is read
+  *    as 4 splits of at most 1.54 MB where it was a 4 MB and a 1.2 MB
+  *    split: its scan stage goes from 2 tasks to 4. Every sf0.01 table
+  *    file is at most 1.04 MB (lineitem), so each stays one split and
+  *    the catalog queries keep their task counts. The 1 MB open cost was
+  *    measured on local disk; [[cluster]] keeps Spark's 4 MB.
   *
   * == The 100 TB read path, composed ==
   *
@@ -108,6 +119,18 @@ object Conf {
     // (autoBroadcastJoinThreshold × shuffle.partitions). The cluster
     // profile sets it to targetPartitionBytes alongside its advisory.
     "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "64MB",
+    // the split rule (scaladoc above): Spark prices opening a file at the
+    // bytes it could scan meanwhile, and 4 MB is its guess for a remote
+    // store. Measured on a 4-vCPU VM with local disk (CSV): 64 one-line files
+    // read 16 to a task took 35-70 ms per task against 5-12 ms for one
+    // file, i.e. 2-4 ms per open, and one task parsed the 5.16 MB
+    // train.txt in 79 ms (65 MB/s), so an open costs ~130-260 KB of scan.
+    // 1 MB over-estimates that (the safe side: small files still pack),
+    // and it lets a 5 MB file fill 4 cores: that scan job went from 197
+    // to 163 ms (med-of-7), its longest task from 74 to 39 ms. That is
+    // all that was measured: one node reading local files. The cluster
+    // profile below puts Spark's 4 MB back.
+    "spark.sql.files.openCostInBytes" -> "1MB",
     "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
     // the comparison is against the COLUMN-PRUNED scan estimate, so even a
     // multi-MB fact file can present well under 1MB once projected — 64KB
@@ -174,6 +197,11 @@ object Conf {
       "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" ->
         targetPartitionBytes.toString,
       "spark.sql.files.maxPartitionBytes" -> targetPartitionBytes.toString,
+      // Spark's default open cost in place of the tuned 1 MB, which was
+      // measured on local disk only: against a remote store 1 MB would
+      // pack ~4x as many small files into each split (fewer scan tasks,
+      // each opening more remote files), and that is not measured
+      "spark.sql.files.openCostInBytes" -> "4MB",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "4",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" ->
         (4L * targetPartitionBytes).toString,

@@ -4,99 +4,62 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.SparkSession
 
 /** Native Catalyst expression for cosine similarity over
   * `array<float|double>` columns, with whole-stage codegen.
   *
-  * The higher-order-function formulation (zip_with + aggregate) evaluates
-  * its lambda per element through the interpreted expression evaluator —
-  * fine for occasional use, but the ANN operators put the dot product in
-  * the innermost loop over |corpus| × |queries| pairs. This expression
-  * generates a single fused Java loop instead (dot + both norms in one
-  * pass).
+  * The ANN operators put the dot product in the innermost loop over
+  * |corpus| × |queries| pairs; this expression computes the dot product
+  * and both norms in one generated loop ([[VectorKernel]]).
   *
-  * Arithmetic is a strict left-to-right double fold — bit-identical to the
-  * HOF version and to the DuckDB oracle's sequential list folds (see
-  * VectorOpsSpec for the equivalence test).
+  * Arithmetic is a strict left-to-right double fold, `dot / (√na · √nb)` —
+  * bit-identical to the higher-order-function form it replaced and to the
+  * DuckDB oracle's sequential list folds (VectorOpsSpec checks it against
+  * `VectorOpsReference`).
   *
   * Degenerate inputs: a zero-norm side yields NULL (never NaN) — callers
   * ranking by cosine filter nulls explicitly (Similarity.topKPerQuery).
-  * NaN ELEMENTS in an input array propagate NaN out; upstream embedding
-  * columns are assumed NaN-free (true of every graft source).
+  * A null element yields NULL and a length mismatch raises
+  * [[VectorLengthMismatch]]; NaN ELEMENTS propagate NaN out.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with VectorKernel {
 
+  override protected def kernelName: String = "cosine_similarity"
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(dt: DataType) = dt match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"cosine_similarity expects array<float|double> inputs, got " +
-          s"${left.dataType.catalogString} / ${right.dataType.catalogString}")
-  }
-
-  private def elemIsFloat(e: Expression): Boolean =
-    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
   override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    val aF = elemIsFloat(left); val bF = elemIsFloat(right)
     var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = if (aF) a.getFloat(i).toDouble else a.getDouble(i)
-      val y = if (bF) b.getFloat(i).toDouble else b.getDouble(i)
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
+    val whole = pass(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData]) { xs =>
+      dot += xs(0) * xs(1); na += xs(0) * xs(0); nb += xs(1) * xs(1)
     }
     val denom = math.sqrt(na) * math.sqrt(nb)
-    if (denom == 0.0) null else java.lang.Double.valueOf(dot / denom)
+    if (!whole || denom == 0.0) null else java.lang.Double.valueOf(dot / denom)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aGet = if (elemIsFloat(left)) "getFloat" else "getDouble"
-    val bGet = if (elemIsFloat(right)) "getFloat" else "getDouble"
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
       val dot = ctx.freshName("dot"); val na = ctx.freshName("na")
       val nb = ctx.freshName("nb"); val denom = ctx.freshName("denom")
+      val loop = passCode(ctx, Seq(a, b), ev.isNull.toString) { case Seq(x, y) =>
+        s"$dot += $x * $y; $na += $x * $x; $nb += $y * $y;"
+      }
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double x = (double) $a.$aGet($i);
-         |  double y = (double) $b.$bGet($i);
-         |  $dot += x * y; $na += x * x; $nb += y * y;
-         |}
+         |$loop
          |double $denom = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
          |if ($denom == 0.0) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $dot / $denom; }
+         |else if (!${ev.isNull}) { ${ev.value} = $dot / $denom; }
          |""".stripMargin
     })
-  }
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): Expression = copy(left = newLeft, right = newRight)
 }
 
 object CosineSimilarity {
-  /** Column-API entry point. */
-  def apply(a: Column, b: Column): Column =
-    ColumnBridge.column(
-      CosineSimilarity(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
   /** Register as a SQL function (`SELECT graft_cosine(a, b)`). */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

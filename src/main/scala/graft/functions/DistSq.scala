@@ -4,70 +4,37 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Native codegen'd squared-euclidean distance over `array<float|double>`
   * — companion to [[CosineSimilarity]]; used in k-means assignment and IVF
   * query routing where the distance sits inside an argmin over k literal
   * centroids (k fused loops beat k interpreted HOF folds). Strict
-  * left-to-right double fold, same as the HOF formulation. */
-case class DistSq(left: Expression, right: Expression) extends BinaryExpression {
+  * left-to-right double fold; edge rules as in [[VectorKernel]]. */
+case class DistSq(left: Expression, right: Expression)
+    extends BinaryExpression with VectorKernel {
 
+  override protected def kernelName: String = "dist_sq"
   override def dataType: DataType = DoubleType
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(dt: DataType) = dt match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"dist_sq expects array<float|double>, got " +
-          s"${left.dataType.catalogString} / ${right.dataType.catalogString}")
-  }
-
-  private def elemIsFloat(e: Expression): Boolean =
-    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
   override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    val aF = elemIsFloat(left); val bF = elemIsFloat(right)
-    var s = 0.0; var i = 0
-    while (i < n) {
-      val x = if (aF) a.getFloat(i).toDouble else a.getDouble(i)
-      val y = if (bF) b.getFloat(i).toDouble else b.getDouble(i)
-      val d = x - y; s += d * d; i += 1
+    var s = 0.0
+    val whole = pass(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData]) { xs =>
+      val d = xs(0) - xs(1); s += d * d
     }
-    java.lang.Double.valueOf(s)
+    if (whole) s else null
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aGet = if (elemIsFloat(left)) "getFloat" else "getDouble"
-    val bGet = if (elemIsFloat(right)) "getFloat" else "getDouble"
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
       val s = ctx.freshName("s"); val dd = ctx.freshName("dd")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $dd = (double) $a.$aGet($i) - (double) $b.$bGet($i);
-         |  $s += $dd * $dd;
-         |}
-         |${ev.value} = $s;
-         |""".stripMargin
+      val loop = passCode(ctx, Seq(a, b), ev.isNull.toString) { case Seq(x, y) =>
+        s"double $dd = $x - $y; $s += $dd * $dd;"
+      }
+      s"""double $s = 0.0;
+         |$loop
+         |${ev.value} = $s;""".stripMargin
     })
-  }
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
-object DistSq {
-  def apply(a: Column, b: Column): Column =
-    ColumnBridge.column(DistSq(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 }

@@ -1,41 +1,32 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
-/** Dense-vector math on `array<float|double>` columns, built entirely from
-  * Catalyst higher-order functions (zip_with / aggregate / transform) so the
-  * whole computation stays inside whole-stage codegen — no UDF boxing, no
-  * driver round-trips, and it vectorizes over any DataFrame cardinality.
+/** Dense-vector math on `array<float|double>` columns. Each operation is
+  * one native Catalyst expression with whole-stage codegen ([[Dot]],
+  * [[CosineSimilarity]], [[DistSq]]): one generated loop per row, where
+  * the higher-order-function forms these replaced (zip_with / aggregate /
+  * transform) evaluated an interpreted lambda with a boxed double per
+  * element.
   *
   * All arithmetic is done in double (inputs widened exactly from float) with
   * strict left-to-right folds, which makes results engine-exact against the
-  * DuckDB oracle's sequential list folds.
+  * DuckDB oracle's sequential list folds. Edge rules are in
+  * [[VectorKernel]]: a null element gives NULL, a length mismatch raises
+  * [[VectorLengthMismatch]].
   */
 object VectorOps {
 
   /** Cast an array<float> to array<double> (exact widening). */
-  def toDouble(v: Column): Column = transform(v, x => x.cast("double"))
+  def toDouble(v: Column): Column = v.cast("array<double>")
 
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(toDouble(a), toDouble(b), (x, y) => x * y),
-      lit(0.0), (acc, x) => acc + x)
+  def dot(a: Column, b: Column): Column = column(Dot(expression(a), expression(b)))
 
-  def normSq(a: Column): Column =
-    aggregate(toDouble(a), lit(0.0), (acc, x) => acc + x * x)
-
-  def norm(a: Column): Column = sqrt(normSq(a))
-
+  /** `dot / (norm · norm)`, NULL when a side has zero norm. */
   def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (norm(a) * norm(b))
+    column(CosineSimilarity(expression(a), expression(b)))
 
-  /** Codegen'd single-pass cosine (CosineSimilarity expression) — same
-    * left-to-right double fold as [[cosine]], bit-identical results, one
-    * fused loop instead of interpreted per-element lambdas. Use this in
-    * pairwise hot loops (ANN, near-dup). */
-  def cosineNative(a: Column, b: Column): Column = CosineSimilarity(a, b)
-
-  /** Squared euclidean distance (native codegen'd loop; identical strict
-    * left-to-right fold as the HOF form it replaced). */
-  def distSq(a: Column, b: Column): Column = DistSq(a, b)
+  /** Squared euclidean distance. */
+  def distSq(a: Column, b: Column): Column = column(DistSq(expression(a), expression(b)))
 }

@@ -63,7 +63,7 @@ object LinearModel {
   /** In-place Gaussian elimination with partial pivoting (d is tiny).
     * (Raggedness of the design matrix is rejected by NormalEqAgg itself —
     * the separate uniformity pre-scan this module used to run is gone.) */
-  private[ml] def solve(a: Array[Array[Double]], b: Array[Double]): Array[Double] = {
+  private[graft] def solve(a: Array[Array[Double]], b: Array[Double]): Array[Double] = {
     val n = b.length
     val m = a.map(_.clone()); val y = b.clone()
     for (col <- 0 until n) {

@@ -410,7 +410,7 @@ object Dedup {
     a.join(b, Seq("label", "bkt"))
       .filter(col("vec_id_a") < col("vec_id_b") &&
               col("vec_id_b") - col("vec_id_a") <= idWindow)
-      .withColumn("cos", round(graft.functions.VectorOps.cosineNative(col("e_a"), col("e_b")), 6))
+      .withColumn("cos", round(graft.functions.VectorOps.cosine(col("e_a"), col("e_b")), 6))
       .select("label", "vec_id_a", "vec_id_b", "cos")
   }
 

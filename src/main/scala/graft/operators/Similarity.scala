@@ -50,7 +50,7 @@ object Similarity {
     val q = queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val c = corpus.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
     val scored = c.join(broadcast(q), col("q_id") =!= col("c_id"))
-      .withColumn("cos", round(VectorOps.cosineNative(col("q_emb"), col("c_emb")), 6))
+      .withColumn("cos", round(VectorOps.cosine(col("q_emb"), col("c_emb")), 6))
     topKPerQuery(scored, k)
   }
 
@@ -92,7 +92,7 @@ object Similarity {
       sig(col("embedding")).as("bucket"))
     val scored = c.join(broadcast(q), Seq("bucket"))
       .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cos", round(VectorOps.cosineNative(col("q_emb"), col("c_emb")), 6))
+      .withColumn("cos", round(VectorOps.cosine(col("q_emb"), col("c_emb")), 6))
     topKPerQuery(scored, k)
   }
 
@@ -158,7 +158,7 @@ object Similarity {
       .select(col("q_id"), col("q_emb"), col("cell"))
     val scored = assigned.join(broadcast(probes), Seq("cell"))
       .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cos", round(VectorOps.cosineNative(col("q_emb"), col("c_emb")), 6))
+      .withColumn("cos", round(VectorOps.cosine(col("q_emb"), col("c_emb")), 6))
     topKPerQuery(scored, k)
   }
 

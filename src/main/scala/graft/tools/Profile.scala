@@ -19,7 +19,12 @@ import graft.{Bench, Forensics, SparkEntry}
   * DataFrame is analyzed when it is built), the planning phases are the
   * noop write's `QueryExecution.tracker`, and the scheduler and task counters
   * (see [[Forensics.Snap]]) cover build and evaluate. One session serves
-  * the whole list, so a multi-query re-measurement pays the boot once;
+  * the whole list, so a multi-query re-measurement pays the boot once,
+  * but a query's `wall_s` then carries JIT order effects: it depends on
+  * the queries profiled before it (ts_pad_truncate read 0.21 s after
+  * ts_window_tensorize_padded in one list and 0.28-0.36 s alone). Take a
+  * wall figure you compare across builds from a single-query run; the
+  * count fields (jobs, stages, tasks, bytes) do not depend on the order.
   * the health lines (boot block, a gap sample before each query) let a
   * clean-window claim carry its own evidence. For a plan, call
   * `explain("formatted")` on the query's frame from a console.

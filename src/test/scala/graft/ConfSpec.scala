@@ -27,6 +27,8 @@ class ConfSpec extends SparkSpec {
         (256L << 20).toString)
       assert(spark.conf.get(
         "spark.sql.autoBroadcastJoinThreshold") == (64L << 20).toString)
+      // the tuned 1 MB open cost was measured on local disk only
+      assert(spark.conf.get("spark.sql.files.openCostInBytes") == "4MB")
       // the tuned base rides along — AQE + skew join + runtime filters
       assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
       assert(spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true")

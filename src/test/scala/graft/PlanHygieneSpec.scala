@@ -242,6 +242,57 @@ class PlanHygieneSpec extends SparkSpec {
     }
   }
 
+  test("the TurboFan evaluation and ts_logreg_embed score rows without interpreted lambdas") {
+    // VectorOps' kernels are native: a zip_with / aggregate / transform in
+    // these plans is a per-element interpreted lambda with a boxed double,
+    // once per feature of every scored row
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayTransform, ZipWith}
+    import org.apache.spark.sql.catalyst.plans.QueryPlan
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    // every expression of the plan, of the subplans it prints beneath its
+    // leaves (adaptive plans and their stages, a SharedShuffle's subplan,
+    // a cached relation's plan) and of its subqueries
+    def lambdas(p: QueryPlan[_]): Seq[String] = {
+      val beneath: Seq[QueryPlan[_]] = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case s: QueryStageExec => Seq(s.plan)
+        case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+        case _ => p.innerChildren
+      }
+      p.expressions.flatMap(_.collect {
+        case e @ (_: ArrayAggregate | _: ZipWith | _: ArrayTransform) => e.prettyName
+      }) ++ (p.children.map(_.asInstanceOf[QueryPlan[_]]) ++ beneath ++
+        p.subqueries.map(_.asInstanceOf[QueryPlan[_]])).flatMap(lambdas)
+    }
+    val split = TurbofanFixture.split(spark, TurbofanFixture.writeTrain())
+    val w = ml.LinearModel.fitRidge(split.filter(col("fold") === "train"),
+      "features", "rul", lambda = 1e-3)
+    val eval = split.select(col("fold"), col("rul"),
+        ml.LinearModel.predict(col("features"), w).as("pred"))
+      .groupBy(col("fold")).agg(count(lit(1)), sum(pow(col("pred") - col("rul"), 2.0)))
+    val evalPlan = eval.queryExecution.executedPlan
+    assert(lambdas(evalPlan).isEmpty, s"predict + MSE:\n${evalPlan.toString.take(2000)}")
+    // ts_logreg_embed fits and scores while it builds: check every plan
+    // its actions execute
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = executed.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = executed.add(qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      SparkEntry.queries("ts_logreg_embed")(spark, sf)
+      org.apache.spark.graft.TestBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val plans = executed.asScala.toSeq.map(_.executedPlan)
+    assert(plans.size >= 5, s"${plans.size} actions seen") // 4 IRLS passes + scoring
+    plans.foreach(p => assert(lambdas(p).isEmpty, s"ts_logreg_embed:\n${p.toString.take(2000)}"))
+  }
+
   test("oracle-checked scans prune columns (no SELECT * scans of lineitem)") {
     val plan = operators.Relational.q1Agg(spark, sf)
       .queryExecution.executedPlan.toString

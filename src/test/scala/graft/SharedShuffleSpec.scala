@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{Tensorize, TimeSeriesOps}
+import graft.operators.Tensorize
 import graft.plans.SharedShuffleExec
 
 /** The tensor frame is planned once and its actions share one shuffle
@@ -10,15 +10,7 @@ import graft.plans.SharedShuffleExec
   * partition count or on AQE, and a lost shuffle output must be
   * recomputed from lineage. */
 class SharedShuffleSpec extends SparkSpec {
-  private val settings = (1 to 3).map(i => s"setting_$i")
-  private val features = settings ++ (1 to 21).map(i => s"sensor_$i")
-
-  private def split(file: String): DataFrame = {
-    val raw = sources.TrajectoryCsv.read(spark, file)
-    val tensors = Tensorize.windowTensorizeMulti(raw, "trajectory_id", Seq("t"),
-      features, t = 10, skip = 5, rulCap = 15, settingCols = settings.toSet)
-    TimeSeriesOps.ratioSplit(tensors, "trajectory_id", Seq("widx"), 0.8)
-  }
+  private def split(file: String): DataFrame = TurbofanFixture.split(spark, file)
 
   /** (trajectory, widx) → (feature bits, rul, fold). */
   private def rows(df: DataFrame): Map[(Int, Long), (Seq[Long], Long, String)] =

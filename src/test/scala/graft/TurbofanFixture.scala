@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** A small turbofan-format training file (train_FD00x.txt layout: id,
   * cycle, 3 settings, 21 sensors, space-separated with a trailing space):
   * 3 trajectories of 30 steps each. */
@@ -15,5 +17,18 @@ object TurbofanFixture {
     }
     pw.close()
     f.getAbsolutePath
+  }
+
+  private val settings = (1 to 3).map(i => s"setting_$i")
+  private val features = settings ++ (1 to 21).map(i => s"sensor_$i")
+
+  /** The turbofan pass's frame over `file`, as perfbench builds it but
+    * with RUL cap 15: window tensors (T = 10, skip 5) split 80/20 by
+    * window index into folds. */
+  def split(spark: SparkSession, file: String): DataFrame = {
+    val tensors = operators.Tensorize.windowTensorizeMulti(
+      sources.TrajectoryCsv.read(spark, file), "trajectory_id", Seq("t"), features,
+      t = 10, skip = 5, rulCap = 15, settingCols = settings.toSet)
+    operators.TimeSeriesOps.ratioSplit(tensors, "trajectory_id", Seq("widx"), 0.8)
   }
 }
